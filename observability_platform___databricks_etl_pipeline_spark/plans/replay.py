@@ -23,8 +23,9 @@ job 2 (data plane):
     (manifest file pruning — no filesystem listing)
   - ONE aggregation: ``max_by(payload, (last_seq, src, content))`` per
     (repo, path) — the composition of dedup-by-(repo,path,commit), LWW and
-    table merge in a single partial-aggregated pass, skew-immune because the
-    hot repo collapses map-side before the exchange                [1 shuffle]
+    table merge in one pass over raw rows repartitioned on the key first (no
+    map-side collapse: a hot repo spreads over its paths, but every event of
+    one hot (repo, path) sorts on one reducer)                     [1 shuffle]
   - fused vectorized transform (classify + sanitize + lang-infer: one
     struct-returning Arrow pandas UDF, one JVM↔Python round trip; sha256 via
     native ``F.sha2``), applied only where the batch won
@@ -189,13 +190,15 @@ class CDCEngine:
         self.write_mode = write_mode or os.environ.get("CDC_WRITE_MODE", "cow")
         if self.write_mode not in ("cow", "mor"):
             raise ValueError(f"write_mode must be 'cow' or 'mor', got {self.write_mode!r}")
-        # 'maxby' (default): union → hash-agg max_by per key (2 content
-        # shuffles: agg exchange + bucket-write repartition; dup rows collapse
-        # map-side). 'bucket_pandas': ONE content shuffle — groupBy(__bucket)
-        # → Arrow applyInPandas LWW reduction → direct partitionBy write (the
-        # reduction output is already bucket-partitioned). Same semantics,
-        # golden-tested against the same oracle; see BENCH/BASELINE.md for
-        # the measured pick. Env override: CDC_MERGE=bucket_pandas.
+        # 'maxby' (default): union → repartition on the key → sort-agg
+        # max_by per key (one content exchange, no map-side collapse; the
+        # bucket write adds a second repartition unless n_buckets divides
+        # shuffle.partitions). 'bucket_pandas': ONE content shuffle —
+        # groupBy(__bucket) → Arrow applyInPandas LWW reduction → direct
+        # partitionBy write (the reduction output is already
+        # bucket-partitioned). Same semantics, golden-tested against the same
+        # oracle; see BENCH/BASELINE.md for the measured pick. Env override:
+        # CDC_MERGE=bucket_pandas.
         self.merge_strategy = (
             merge_strategy or os.environ.get("CDC_MERGE", "maxby")
         )

@@ -1441,14 +1441,21 @@ def cdc_replay_documents_mor(spark, sf_dir):
 # parquet files the engine consumed. Content is deterministic
 # (gen/changelog.py: every column a pure function of the row id); the write
 # is mode("overwrite"), so reruns replace in place — fixed-size, never an
-# unbounded leak. The uid+pid suffix makes the path truly PER-PROCESS
-# (r3 ADVICE): different users can't collide in world-shared /tmp, and two
-# concurrent processes of one user can't overwrite each other's WAL while
-# the other's DuckDB oracle is mid-read. Each process bakes its own path
-# into its oracle strings at import; the dir is removed at exit.
+# unbounded leak. The default uid+pid suffix makes the path truly
+# PER-PROCESS (r3 ADVICE): different users can't collide in world-shared
+# /tmp, and two concurrent processes of one user can't overwrite each
+# other's WAL while the other's DuckDB oracle is mid-read. Each process
+# bakes its own path into its oracle strings at import; the dir is removed
+# at exit. A harness that compares oracle SQL text across processes sets
+# CDC_GATE_WAL_SUFFIX, which makes the text byte-identical between runs;
+# keeping concurrent runs with the same suffix apart is then its job.
 _ENTRY_WAL = os.path.join(
     tempfile.gettempdir(),
-    f"cdc-gate-entry-wal-4000-s42-u{os.getuid() if hasattr(os, 'getuid') else 0}-p{os.getpid()}",
+    "cdc-gate-entry-wal-4000-s42-"
+    + os.environ.get(
+        "CDC_GATE_WAL_SUFFIX",
+        f"u{os.getuid() if hasattr(os, 'getuid') else 0}-p{os.getpid()}",
+    ),
     "wal",
 )
 

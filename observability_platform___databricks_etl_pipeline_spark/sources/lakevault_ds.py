@@ -52,10 +52,14 @@ Design notes (100 TB):
   ``pushFilters``. Every pushed filter is returned as unsupported so Spark
   re-applies it row-level — manifest pruning is a superset guarantee, so
   claiming the filter would be wrong.
-- **Reads are executor-side pyarrow.** One input partition per data file on
-  copy-on-write buckets (max parallelism); one partition per BUCKET where
-  merge-on-read deltas are live, because the LWW fold is key-scoped and
-  keys are bucket-disjoint — the fold is partition-local by construction.
+- **Reads are executor-side pyarrow.** Whole buckets are packed, in bucket
+  order, into input partitions by manifest bytes with Spark's file-source
+  next-fit rule at its defaults (each file costs its bytes + 4 MiB open
+  cost, a partition holds at most 128 MiB). Every Python task pays ~0.25 s
+  of fixed runner overhead on a 4-core host, against a few ms of pyarrow
+  work per small file, so a task per file made a 16-file scan 16 times that
+  overhead. Keys are bucket-disjoint, so equality deletes and the LWW fold
+  are partition-local for any group of whole buckets.
   The fold reproduces ``scan()``'s canonical order exactly: ascending
   ``(last_seq, commit-ordinal[, content_sha256])`` with nulls first,
   last row per key wins (= Spark ``max_by`` struct order).
@@ -78,8 +82,9 @@ Design notes (100 TB):
   hook, so batch DS reads materialize all columns — for narrow projections
   over wide tables, ``LakeVault.scan()`` (native parquet reader, pruned
   ``ReadSchema``) remains the hot path. The change-feed diff loads both
-  sides of each affected bucket into one task; ``scan_changes`` (the
-  in-engine DataFrame variant) shards finer and is the bulk-backfill path.
+  sides of each packed group of affected buckets into one task;
+  ``scan_changes`` (the in-engine DataFrame variant) shards finer and is the
+  bulk-backfill path.
 
 Reference anchors: the reference consumes Delta tables only via full-table
 reads inside Databricks (``02_enrich_events.py:69-74``,
@@ -199,6 +204,31 @@ def _schemas_payload(snap: Snapshot, files: list[dict[str, Any]]) -> dict[str, l
     return {str(sid): _plain_cols(snap.schemas[sid]) for sid in needed}
 
 
+# Spark's file-source split rule with its default constants
+# (spark.sql.files.openCostInBytes / maxPartitionBytes). The planner runs in
+# a Python worker that sees neither the session conf nor the core count, so
+# they are fixed numbers, not options.
+_OPEN_COST_BYTES = 4 << 20
+_MAX_PARTITION_BYTES = 128 << 20
+
+
+def _pack(units: list[list[dict[str, Any]]]) -> list[slice]:
+    """Next-fit packing of whole units (buckets), in order, by manifest
+    bytes: a file costs its bytes plus the open cost, and a unit starts a
+    new partition when it would push the open one past the cap. Always
+    returns at least one (possibly empty) slice, since Spark schedules at
+    least one partition and an empty one reads as zero rows."""
+    out, start, size = [], 0, 0
+    for i, unit in enumerate(units):
+        cost = sum(f.get("bytes", 0) + _OPEN_COST_BYTES for f in unit)
+        if i > start and size + cost > _MAX_PARTITION_BYTES:
+            out.append(slice(start, i))
+            start, size = i, 0
+        size += cost
+    out.append(slice(start, len(units)))
+    return out
+
+
 def _group_read_partitions(
     root: str,
     snap: Snapshot,
@@ -206,60 +236,23 @@ def _group_read_partitions(
     cur_cols: list[dict[str, Any]],
     key_cols: list[str],
 ) -> list["_ScanPartition"]:
-    """COW files → one partition per file; buckets with live MOR deltas →
-    one partition per bucket (the LWW fold is key-scoped and keys are
-    bucket-disjoint, so folding per bucket equals scan()'s global fold).
-    Legacy bucket-less files alongside deltas cannot be fold-scoped: they
-    collapse into a single partition (pre-bucket tables only)."""
-    entries = [_file_entry(f) for f in files]
-    if not entries:
-        # Spark schedules at least one partition; an empty file group reads
-        # as zero record batches of the declared schema
-        return [
-            _ScanPartition(
-                root=root,
-                files=[],
-                schemas={},
-                cur_cols=cur_cols,
-                key_cols=key_cols,
-            )
-        ]
-    merge_buckets = {f["bucket"] for f in entries if f["delta"] or f["eq_delete"]}
-    parts: list[_ScanPartition] = []
-    if None in merge_buckets or (merge_buckets and any(f["bucket"] is None for f in entries)):
-        grp = entries
-        return [
-            _ScanPartition(
-                root=root,
-                files=grp,
-                schemas=_schemas_payload(snap, grp),
-                cur_cols=cur_cols,
-                key_cols=key_cols,
-            )
-        ]
+    """Whole buckets, in bucket order, packed by ``_pack``. Keys are
+    bucket-disjoint, so equality deletes and the LWW fold over any group of
+    whole buckets equal scan()'s global ones. Legacy bucket-less files
+    alongside deltas or deletes cannot be fold-scoped: the whole file set is
+    one unit (pre-bucket tables only)."""
     by_bucket: dict[Any, list[dict]] = {}
-    for f in entries:
-        if f["bucket"] in merge_buckets:
-            by_bucket.setdefault(f["bucket"], []).append(f)
-        else:
-            parts.append(
-                _ScanPartition(
-                    root=root,
-                    files=[f],
-                    schemas=_schemas_payload(snap, [f]),
-                    cur_cols=cur_cols,
-                    key_cols=key_cols,
-                )
-            )
-    for _, grp in sorted(by_bucket.items()):
+    for f in files:
+        by_bucket.setdefault(f.get("bucket"), []).append(f)
+    if None in by_bucket and any(f.get("delta") or f.get("eq_delete") for f in files):
+        units = [files]
+    else:
+        units = [by_bucket[b] for b in sorted(by_bucket, key=lambda b: -1 if b is None else b)]
+    parts = []
+    for s in _pack(units):
+        grp = [_file_entry(f) for u in units[s] for f in u]
         parts.append(
-            _ScanPartition(
-                root=root,
-                files=grp,
-                schemas=_schemas_payload(snap, grp),
-                cur_cols=cur_cols,
-                key_cols=key_cols,
-            )
+            _ScanPartition(root, grp, _schemas_payload(snap, grp), cur_cols, key_cols)
         )
     return parts
 
@@ -385,29 +378,39 @@ def _apply_eq_deletes_arrow(
         old_by_id = {c["id"]: c for c in schemas[str(f["schema_id"])]}
         phys = [old_by_id[c["id"]]["name"] for c in key_col_defs]
         t = pq.read_table(os.path.join(root, f["path"]), columns=phys)
-        cols = {
-            c["name"]: _normalize_arrow(
-                t.column(old_by_id[c["id"]]["name"]), _ARROW_TYPE[c["type"]]
-            )
-            for c in key_col_defs
-        }
-        d = pa.table(cols).to_pandas()
+        d = pa.table(
+            {
+                c["name"]: _normalize_arrow(
+                    t.column(old_by_id[c["id"]]["name"]), _ARROW_TYPE[c["type"]]
+                )
+                for c in key_col_defs
+            }
+        )
+        d = d.filter(pa.array(_keyed(d, key_cols))).to_pandas()
         d["__del_ord"] = f["ord"]
         dparts.append(d)
     dels = pd.concat(dparts, ignore_index=True)
-    # Spark join semantics: a null-keyed delete row matches NOTHING (nulls
-    # never compare equal in joins), while pandas merge pairs NaN keys —
-    # drop them explicitly before building the max-ordinal probe (r5 ADVICE;
-    # groupby's dropna already did this implicitly, made load-bearing here)
-    dels = dels[dels[key_cols].notna().all(axis=1)]
     if dels.empty:
         return out
-    dmax = dels.groupby(key_cols, as_index=False)["__del_ord"].max()
+    # Spark join semantics: a null key matches nothing, while NaN equals NaN.
+    # pandas conflates the two (a null float reads as NaN), so null-keyed
+    # rows are masked on the arrow side: dropped from the deletes above and
+    # never deleted below; NaN keys group and merge as values
+    dmax = dels.groupby(key_cols, as_index=False, dropna=False)["__del_ord"].max()
     probe = pd.DataFrame({k: out.column(k).to_pandas() for k in key_cols})
     probe["__ord"] = out.column("__ord").to_pandas()
     m = probe.merge(dmax, on=key_cols, how="left")
     keep = m["__del_ord"].isna() | (m["__ord"] >= m["__del_ord"])
-    return out.filter(pa.array(keep.to_numpy(dtype=bool)))
+    return out.filter(pa.array(keep.to_numpy(dtype=bool) | ~_keyed(out, key_cols)))
+
+
+def _keyed(t: pa.Table, key_cols: list[str]) -> np.ndarray:
+    """Rows whose key columns are all non-null. Only genuine nulls count:
+    NaN is a value that equals itself in Spark joins and grouping."""
+    mask = np.ones(t.num_rows, dtype=bool)
+    for k in key_cols:
+        mask &= pc.is_valid(t.column(k)).to_numpy(zero_copy_only=False)
+    return mask
 
 
 def _lww_fold(t: pa.Table, key_cols: list[str], tie_cols: list[str]) -> pa.Table:
@@ -428,13 +431,12 @@ def _lww_fold(t: pa.Table, key_cols: list[str], tie_cols: list[str]) -> pa.Table
     same = np.ones(max(n - 1, 0), dtype=bool)
     for k in key_cols:
         col = t.column(k).to_numpy(zero_copy_only=False)
-        eq = col[:-1] == col[1:]
-        if col.dtype.kind == "f":
-            # NaN keys: Spark's groupBy folds NaN==NaN into one group; plain
-            # numpy == says NaN != NaN and would keep duplicate rows for a
-            # NaN-keyed float key (r5 ADVICE)
-            eq |= (col != col)[:-1] & (col != col)[1:]
-        same &= eq
+        null = ~_keyed(t, [k])
+        # Spark's groupBy puts nulls in one group and NaN==NaN in another;
+        # numpy reads a null float as NaN and says NaN != NaN, so both
+        # groups are matched from the validity mask, never from ==
+        nan = (col != col) & ~null
+        same &= (col[:-1] == col[1:]) | (null[:-1] & null[1:]) | (nan[:-1] & nan[1:])
     keep = np.ones(n, dtype=bool)
     keep[:-1] = ~same
     return t.filter(pa.array(keep))
@@ -462,14 +464,13 @@ def _diff_rows(
     (keys..., _change_type, post-or-pre image..., _before struct|None)."""
     bdf = before.to_pandas(types_mapper=pd.ArrowDtype)
     adf = after.to_pandas(types_mapper=pd.ArrowDtype)
-    # Spark's scan_changes full-outer join never matches null keys, while
-    # pandas merge pairs them — route null-keyed rows around the merge so
-    # they surface as a bare delete (before side) / insert (after side),
-    # exactly like the native path (r5 ADVICE)
-    b_nullkey = ~bdf[key_cols].notna().all(axis=1) if len(bdf) else pd.Series(dtype=bool)
-    a_nullkey = ~adf[key_cols].notna().all(axis=1) if len(adf) else pd.Series(dtype=bool)
-    null_b, bdf = (bdf[b_nullkey], bdf[~b_nullkey]) if len(bdf) else (bdf, bdf)
-    null_a, adf = (adf[a_nullkey], adf[~a_nullkey]) if len(adf) else (adf, adf)
+    # Spark's scan_changes full-outer join never matches null keys (NaN
+    # keys do match), while pandas merge pairs them — route null-keyed rows
+    # around the merge so they surface as a bare delete (before side) /
+    # insert (after side), exactly like the native path
+    b_key, a_key = _keyed(before, key_cols), _keyed(after, key_cols)
+    null_b, bdf = bdf[~b_key], bdf[b_key]
+    null_a, adf = adf[~a_key], adf[a_key]
     m = bdf.merge(adf, on=key_cols, how="outer", suffixes=("__a", "__b"), indicator=True)
     in_a = (m["_merge"] == "left_only") | (m["_merge"] == "both")
     in_b = (m["_merge"] == "right_only") | (m["_merge"] == "both")
@@ -530,8 +531,8 @@ class _ScanPartition(InputPartition):
 class _ChangesPartition(InputPartition):
     def __init__(self, root, before, after, schemas, cur_cols, key_cols):
         self.root = root
-        self.before = before  # file entries at snapshot A (this bucket)
-        self.after = after  # file entries at snapshot B (this bucket)
+        self.before = before  # file entries at snapshot A (these buckets)
+        self.after = after  # file entries at snapshot B (these buckets)
         self.schemas = schemas
         self.cur_cols = cur_cols
         self.key_cols = key_cols
@@ -579,26 +580,24 @@ def _plan_changes_partitions(
         for sid, ts in {**snap_a.schemas, **snap_b.schemas}.items()
     }
     if full:
-        grps = [(list(snap_a.files), list(snap_b.files))]
+        units = [(list(snap_a.files), list(snap_b.files))]
     else:
-        if not affected:
-            return []
         a_by, b_by = {}, {}
         for f in snap_a.files:
             a_by.setdefault(f["bucket"], []).append(f)
         for f in snap_b.files:
             b_by.setdefault(f["bucket"], []).append(f)
-        grps = [(a_by.get(b, []), b_by.get(b, [])) for b in affected]
+        units = [(a_by.get(b, []), b_by.get(b, [])) for b in affected]
     return [
         _ChangesPartition(
             root=v.root,
-            before=[_file_entry(f) for f in a_files],
-            after=[_file_entry(f) for f in b_files],
+            before=[_file_entry(f) for a_files, _ in units[s] for f in a_files],
+            after=[_file_entry(f) for _, b_files in units[s] for f in b_files],
             schemas=all_schemas,
             cur_cols=cur_cols,
             key_cols=key_cols,
         )
-        for a_files, b_files in grps
+        for s in _pack([a_files + b_files for a_files, b_files in units])
     ]
 
 
@@ -690,21 +689,9 @@ class _ChangesBatchReader(DataSourceReader):
             )
         to_sid = _resolve_snapshot_id(v, self.options, "tosnapshotid")
         snap_b = v.snapshot(to_sid)
-        parts = _plan_changes_partitions(
+        return _plan_changes_partitions(
             v, int(from_sid), snap_b.snapshot_id, _plain_cols(snap_b.schema)
         )
-        if not parts:  # no changed buckets: one empty partition (see above)
-            parts = [
-                _ChangesPartition(
-                    root=v.root,
-                    before=[],
-                    after=[],
-                    schemas={},
-                    cur_cols=_plain_cols(snap_b.schema),
-                    key_cols=list(v.key_cols),
-                )
-            ]
-        return parts
 
     def read(self, partition):
         return _read_changes_partition(partition)

@@ -135,22 +135,26 @@ def test_ds_time_travel_and_tag(spark, evolved_mor_table):
 
 def test_ds_filter_pushdown_prunes_files(spark, tmp_path):
     """An EqualTo on the first key column reaches the manifest pruner: the
-    planned partition count drops below the file count, and the row-level
-    result still matches scan()+filter (pruning is a superset, Spark
-    re-applies the predicate)."""
+    planned file set is a strict subset of the snapshot's files that still
+    holds the key's bucket, and the row-level result matches scan()+filter
+    (pruning is a superset, Spark re-applies the predicate)."""
     from pyspark.sql.datasource import EqualTo
+
+    from observability_platform___databricks_etl_pipeline_spark.plans.sparkhash import bucket_of
 
     root = str(tmp_path / "t")
     v = LakeVault.create(spark, root, COLS, key_cols=("repo", "path"), n_buckets=8)
     rows = [(f"r{i}", f"p{i}.py", i, i, _ts(i % 60)) for i in range(40)]
     _commit(spark, v, rows, "b0")
-    n_files = len(v.snapshot().files)
-    assert n_files > 1
+    snap = v.snapshot()
+    all_files = {f["path"] for f in snap.files}
+    assert len(all_files) > 1
 
     rd = _SnapshotBatchReader({"path": root})
     list(rd.pushFilters([EqualTo(("repo",), "r7")]))
-    pruned = rd.partitions()
-    assert len(pruned) < n_files
+    planned = {f["path"] for p in rd.partitions() for f in p.files}
+    b = bucket_of(["r7", "p7.py"], 8)
+    assert {f["path"] for f in snap.files if f["bucket"] == b} <= planned < all_files
 
     _register(spark)
     ds = spark.read.format("lakevault").load(root).where(F.col("repo") == "r7")
@@ -365,3 +369,205 @@ def test_ds_fully_keyed_probe_prunes_to_one_bucket(spark, tmp_path):
     assert [tuple(r) for r in ds.collect()] == [
         ("org/r3", "f13.py", 13, 13, _ts(13))
     ]
+
+
+# ---------------------------------------------------------------------------
+# read-partition packing: whole buckets, in bucket order, by manifest bytes
+# ---------------------------------------------------------------------------
+
+_MIB = 1 << 20
+
+
+def _fake_files(sizes_by_bucket):
+    """Manifest-shaped file entries: ``{bucket: [bytes, ...]}``."""
+    return [
+        {"path": f"b{b}/f{i}.parquet", "schema_id": 0, "ord": 1, "bucket": b, "bytes": n}
+        for b, sizes in sizes_by_bucket.items()
+        for i, n in enumerate(sizes)
+    ]
+
+
+def _fake_snap(files):
+    from types import SimpleNamespace
+
+    return SimpleNamespace(files=files, schemas={0: SimpleNamespace(columns=[])}, n_buckets=64)
+
+
+def _bucket_groups(file_groups):
+    """Per partition, the buckets it holds; asserts no bucket is split."""
+    groups = [sorted({f["bucket"] for f in g}) for g in file_groups]
+    seen = [b for g in groups for b in g]
+    assert len(seen) == len(set(seen)), f"a bucket spans partitions: {groups}"
+    return groups
+
+
+def test_pack_many_small_buckets_is_one_partition():
+    files = _fake_files({b: [200_000] for b in range(16)})
+    parts = lakevault_ds._group_read_partitions("/t", _fake_snap(files), files, [], ["k"])
+    assert _bucket_groups(p.files for p in parts) == [list(range(16))]
+
+
+def test_pack_splits_only_at_bucket_boundaries():
+    """Each bucket holds two 15 MiB files (2 x (15 + 4 open) = 38 MiB), so
+    three buckets fit under the 128 MiB cap and the fourth starts a new
+    partition; a bucket bigger than the cap stays whole on its own."""
+    sizes = {b: [15 * _MIB, 15 * _MIB] for b in range(6)}
+    sizes[6] = [200 * _MIB]
+    sizes[7] = [_MIB]
+    files = _fake_files(sizes)
+    parts = lakevault_ds._group_read_partitions("/t", _fake_snap(files), files, [], ["k"])
+    assert _bucket_groups(p.files for p in parts) == [[0, 1, 2], [3, 4, 5], [6], [7]]
+    assert {f["path"] for p in parts for f in p.files} == {f["path"] for f in files}
+
+
+def test_pack_legacy_bucketless_files_with_deltas_stay_one_partition():
+    files = _fake_files({b: [100 * _MIB] for b in range(3)})
+    files.append(dict(files[0], path="legacy.parquet", bucket=None))
+    files[0]["delta"] = True
+    parts = lakevault_ds._group_read_partitions("/t", _fake_snap(files), files, [], ["k"])
+    assert len(parts) == 1 and len(parts[0].files) == len(files)
+
+
+def test_pack_changes_partitions_by_both_sides():
+    """The change feed packs affected buckets by the bytes of BOTH
+    snapshots' files; unaffected buckets are never planned."""
+    from types import SimpleNamespace
+
+    before = _fake_files({b: [20 * _MIB] for b in range(8)})
+    # buckets 0-5 rewritten: a before and an after file of 20 + 4 MiB each,
+    # so 48 MiB per bucket and two buckets per partition (3 x 48 > 128)
+    after = [f for f in before if f["bucket"] >= 6] + [
+        dict(f, path=f"new/{f['path']}") for f in before if f["bucket"] < 6
+    ]
+    snaps = {1: _fake_snap(before), 2: _fake_snap(after)}
+    v = SimpleNamespace(snapshot=snaps.__getitem__, key_cols=("k",), root="/t")
+    parts = lakevault_ds._plan_changes_partitions(v, 1, 2, [])
+    assert _bucket_groups(p.before for p in parts) == [[0, 1], [2, 3], [4, 5]]
+    assert _bucket_groups(p.after for p in parts) == [[0, 1], [2, 3], [4, 5]]
+    # nothing changed: one empty partition, as Spark needs at least one
+    (empty,) = lakevault_ds._plan_changes_partitions(v, 2, 2, [])
+    assert empty.before == [] and empty.after == []
+
+
+def test_ds_packed_merge_buckets_match_scan_and_changes(spark, evolved_mor_table):
+    """Packing puts several merge-on-read buckets (deltas AND equality
+    deletes, across a rename) in one partition; the partition-local deletes,
+    fold and diff must still equal scan() and scan_changes()."""
+    root, v = evolved_mor_table
+    a = v.snapshot_ids()[1]
+    v.delete("path = 'b.py' or path = 'd.py'", mode="mor")
+    _commit(
+        spark,
+        v,
+        [("r3", "d.py", 2, 41, _ts(2), 0.4), ("r6", "g.py", 7, 70, _ts(7), 0.7)],
+        "b3",
+        ddl="repo string, path string, last_seq long, size long, ts timestamp, quality double",
+        delta=True,
+    )
+    snap = v.snapshot()
+    merge_buckets = {f["bucket"] for f in snap.files if f.get("delta") or f.get("eq_delete")}
+    parts = _SnapshotBatchReader({"path": root}).partitions()
+    assert max(len({f["bucket"] for f in p.files} & merge_buckets) for p in parts) >= 2
+
+    _register(spark)
+    assert _rows(spark.read.format("lakevault").load(root)) == _rows(v.scan())
+    b = v.current_snapshot_id()
+    ch = (
+        spark.read.format("lakevault")
+        .option("feed", "changes")
+        .option("fromSnapshotId", a)
+        .option("toSnapshotId", b)
+        .load(root)
+    )
+    assert _rows(ch) == _rows(v.scan_changes(a, b))
+
+
+# ---------------------------------------------------------------------------
+# NaN keys: Spark joins and groups NaN == NaN; only nulls match nothing
+# ---------------------------------------------------------------------------
+
+F_COLS = [("k", "double"), ("last_seq", "long"), ("v", "int")]
+F_DDL = "k double, last_seq long, v int"
+
+
+def _float_keyed(spark, tmp_path, n_buckets=2):
+    root = str(tmp_path / "f")
+    v = LakeVault.create(spark, root, F_COLS, key_cols=("k",), n_buckets=n_buckets)
+    nan = float("nan")
+    _commit(spark, v, [(1.0, 1, 10), (nan, 2, 20), (None, 3, 30), (2.0, 4, 40)], "f0",
+            ddl=F_DDL)
+    return root, v
+
+
+def _printed(df):
+    # NaN != NaN and None does not order against a float: compare the
+    # printed rows
+    return sorted(
+        repr(tuple(tuple(x) if hasattr(x, "asDict") else x for x in r)) for r in df.collect()
+    )
+
+
+def test_ds_nan_keyed_equality_delete_matches_scan(spark, tmp_path):
+    """A MOR delete of the NaN key removes the NaN-keyed row on both read
+    paths; a null-keyed delete row matches nothing, like Spark's join."""
+    root, v = _float_keyed(spark, tmp_path)
+    a = v.current_snapshot_id()
+    v.delete("isnan(k) or k is null or k = 2.0", mode="mor")
+    b = v.current_snapshot_id()
+    ref = v.scan()
+    assert not any(r["k"] is not None and r["k"] != r["k"] for r in ref.collect())
+
+    _register(spark)
+    assert _printed(spark.read.format("lakevault").load(root)) == _printed(ref)
+    ch = (
+        spark.read.format("lakevault")
+        .option("feed", "changes")
+        .option("fromSnapshotId", a)
+        .option("toSnapshotId", b)
+        .load(root)
+    )
+    assert _printed(ch) == _printed(v.scan_changes(a, b))
+
+
+def test_ds_nan_keyed_update_is_one_update(spark, tmp_path):
+    """A NaN-keyed row updated between two snapshots is one ``update`` in
+    both change feeds, not a delete plus an insert, and the two null-keyed
+    rows (one per snapshot) never pair up."""
+    root, v = _float_keyed(spark, tmp_path, n_buckets=1)
+    a = v.current_snapshot_id()
+    _commit(spark, v, [(float("nan"), 5, 21), (None, 6, 31)], "f1", ddl=F_DDL, delta=True)
+    b = v.current_snapshot_id()
+    ref = v.scan_changes(a, b)
+    kinds = sorted((repr(r["k"]), r["_change_type"]) for r in ref.collect())
+    assert ("nan", "update") in kinds
+
+    _register(spark)
+    assert _printed(spark.read.format("lakevault").load(root)) == _printed(v.scan())
+    ch = (
+        spark.read.format("lakevault")
+        .option("feed", "changes")
+        .option("fromSnapshotId", a)
+        .option("toSnapshotId", b)
+        .load(root)
+    )
+    assert _printed(ch) == _printed(ref)
+
+
+def test_lww_fold_keeps_null_and_nan_keys_apart():
+    """Spark's groupBy makes one group of null keys and another of NaN keys.
+    numpy reads a null double as NaN, so the fold must not let the two
+    meet when they sort next to each other."""
+    import pyarrow as pa
+
+    from observability_platform___databricks_etl_pipeline_spark.sources.lakevault_ds import _lww_fold
+
+    nan = float("nan")
+    t = pa.table(
+        {
+            "k": pa.array([None, nan, None, nan], pa.float64()),
+            "last_seq": [1, 2, 3, 4],
+            "__ord": [1, 1, 1, 1],
+        }
+    )
+    out = _lww_fold(t, ["k"], ["last_seq", "__ord"]).to_pylist()
+    assert sorted(r["last_seq"] for r in out) == [3, 4]

@@ -98,3 +98,26 @@ def test_entry_smoke(spark):
     out = entrymod.entry(spark)
     assert out.count() > 0
     assert set(out.columns) == {"lang", "files", "repos", "bytes"}
+
+
+def test_oracle_sql_text_is_identical_across_processes():
+    """With CDC_GATE_WAL_SUFFIX set, two processes bake the same gate WAL
+    path into their oracle SQL, so the text compares byte for byte."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import hashlib, json, __spark_entry__ as e;"
+        "print(hashlib.sha256(json.dumps(e.oracle_sql(), sort_keys=True).encode()).hexdigest())"
+    )
+    env = dict(os.environ, CDC_GATE_WAL_SUFFIX="fixed", PYTHONPATH=root)
+    digests = {
+        subprocess.run(
+            [sys.executable, "-c", code], cwd=root, env=env, check=True,
+            capture_output=True, text=True,
+        ).stdout.strip()
+        for _ in range(2)
+    }
+    assert len(digests) == 1, digests
