@@ -301,7 +301,7 @@ def write_report(state: dict) -> None:
             "~1x under MOR); it pays one partial-aggregated max_by on every read",
             "until deltas fold back into base files. Since round 3 that folding is",
             "AUTOMATIC and INCREMENTAL: any bucket whose delta pile exceeds",
-            "`mor_compact_threshold` (default 8, env CDC_MOR_COMPACT_THRESHOLD) is",
+            "`mor_compact_threshold` (default 8) is",
             "compacted bucket-scoped — O(selected buckets), never O(table) — so",
             "read cost stays bounded without operator intervention. At this",
             "table/batch ratio COW is still faster end-to-end; the crossover",
@@ -357,7 +357,8 @@ def write_report(state: dict) -> None:
         "",
         "## Merge-strategy experiment (round 2, measured rejection)",
         "",
-        "Two merge implementations are benchmarked behind `CDC_MERGE` on the",
+        "Two merge implementations were benchmarked behind a (since deleted)",
+        "strategy switch on the",
         "identical 8M-event workload:",
         "",
         "| strategy | local[2] ev/s | local[8] ev/s | 2→8 efficiency |",
@@ -369,8 +370,9 @@ def write_report(state: dict) -> None:
         "The single-shuffle path loses 45% absolute throughput AND scales worse:",
         "the Arrow round-trip of full bucket payloads through Python costs more",
         "than the JVM shuffle it saves (tmpfs shuffle is cheap; Python workers",
-        "add their own contention). Kept as a tested, documented strategy flag;",
-        "`maxby` remains the default. The round-1 winner-selection/content-fetch",
+        "add their own contention). The `bucket_pandas` strategy, its switch and",
+        "its write branch have since been deleted from the engine: `maxby` is the",
+        "one merge path. The round-1 winner-selection/content-fetch",
         "split idea is likewise rejected by measurement: it can only save the",
         "duplicate+stale fraction of shuffle bytes, which this workload pins at",
         "~6-8% — under the 15% adoption bar set in the round-1 verdict.",

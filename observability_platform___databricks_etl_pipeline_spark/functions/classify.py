@@ -35,6 +35,12 @@ _ALIASES: dict[str, str] = {
 }
 
 
+# The characters Python's ``str.strip()`` removes (``str.isspace``), as a Java
+# regex class: ``F.trim`` strips only spaces and Java's ``\s`` misses
+# U+001C-001F, U+0085 and the Unicode spaces.
+_WS = r"[\t-\r\x1c-\x20\x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
+
+
 def classify_op_series(op: pd.Series, content: pd.Series) -> pd.Series:
     norm = op.str.strip().str.lower().map(_ALIASES)
     # fallback: unknown/null op → delete if no content else update
@@ -51,7 +57,7 @@ def classify_op_expr(op: "F.Column", content: "F.Column") -> "F.Column":
     """Native-expression equivalent of ``classify_op_series`` (same alias
     table, same null/unknown fallback) — zero-Python codegen path for the
     replay hot loop; equivalence is pinned by tests/test_transform_native.py."""
-    norm = F.lower(F.trim(op))
+    norm = F.lower(F.regexp_replace(op, f"^{_WS}+|{_WS}+$", ""))
     mapped = None
     for k, v in _ALIASES.items():
         cond = norm == k

@@ -273,7 +273,7 @@ _STAT_STR_MAX = 64
 # only while the candidate set (post bucket/key/stats pruning) is at most
 # this many files — beyond it the distributed reader-side row-group bloom
 # filter is the scale path and the driver must not serially read blooms.
-_BLOOM_PRUNE_MAX_FILES = int(os.environ.get("CDC_BLOOM_PRUNE_MAX_FILES", "64"))
+_BLOOM_PRUNE_MAX_FILES = 64
 
 
 def _stat_val(v: Any) -> Any:
@@ -925,7 +925,7 @@ class LakeVault:
         ``column_equals={col: v}`` is the POINT-PROBE variant: each entry is
         folded into ``column_ranges`` as ``(v, v)`` for min/max skipping,
         and — when bucket/key pruning has already shrunk the candidate set
-        to at most ``CDC_BLOOM_PRUNE_MAX_FILES`` (default 64) — each
+        to at most ``_BLOOM_PRUNE_MAX_FILES`` (64) — each
         surviving file's parquet-native bloom filter is probed with a
         ranged read of just the bloom bytes (plans/bloom.py), dropping
         definite-absent files before Spark schedules a single task. Beyond
@@ -1332,7 +1332,7 @@ class LakeVault:
     # object store would otherwise make the commit tail driver-serial (the
     # shape Iceberg avoids by collecting per-file stats during the write).
     # Below it, one Spark job costs more than the loop it replaces.
-    _STAT_HARVEST_DRIVER_MAX = int(os.environ.get("CDC_STAT_DRIVER_MAX", "64"))
+    _STAT_HARVEST_DRIVER_MAX = 64
 
     def _register_written_files(
         self, write_dir: str, schema_id: int, delta: bool = False, eq_delete: bool = False

@@ -9,10 +9,10 @@ data on rerun — ``01_ingest_raw_logs.py:178,213-218``).
 Per-batch plan — exactly TWO Spark jobs, ONE data shuffle:
 
 job 1 (control plane, narrow scan — no content column decoded):
-  - collect schema-evolution events (chunk-aligned barrier, seq order) and
-    the malformed-row trickle (quarantined via a driver-side pyarrow write,
-    full scan-free; reference analog: corrupt-record counting
-    ``01:132-152`` — but kept, not dropped)
+  - collect schema-evolution events (chunk-aligned barrier, seq order); the
+    malformed-row trickle is counted here and written by a distributed
+    quarantine job that overlaps the merge below (reference analog:
+    corrupt-record counting ``01:132-152`` — but kept, not dropped)
   - ``df.observe`` rides the same pass: row counts, quarantine counts,
     per-WAL-partition offset high-water marks, and the affected-COW-bucket
     set (collect_set) — zero dedicated stats jobs, vs the reference's
@@ -26,9 +26,9 @@ job 2 (data plane):
     table merge in one pass over raw rows repartitioned on the key first (no
     map-side collapse: a hot repo spreads over its paths, but every event of
     one hot (repo, path) sorts on one reducer)                     [1 shuffle]
-  - fused vectorized transform (classify + sanitize + lang-infer: one
-    struct-returning Arrow pandas UDF, one JVM↔Python round trip; sha256 via
-    native ``F.sha2``), applied only where the batch won
+  - fused transform (classify + sanitize + lang-infer as native codegen
+    expressions; sha256 via native ``F.sha2``), applied only where the
+    batch won
   - merge action counts + dedup accounting ride the bucket write via a
     second ``df.observe``; write replaced buckets   [1 write repartition]
 
@@ -147,15 +147,17 @@ class TailBatch:
 class CDCEngine:
     """Reusable change-event processor over a LakeVault COW table."""
 
+    # the one merge implementation (_merge_maxby); bench.py reports this name
+    merge_strategy = "maxby"
+
     def __init__(
         self,
         spark: SparkSession,
         table_root: str,
         n_buckets: int = 16,
         with_rollup: bool = True,
-        merge_strategy: str | None = None,
         write_mode: str | None = None,
-        mor_compact_threshold: int | None = None,
+        mor_compact_threshold: int = 8,
         branch: str | None = None,
         bloom_cols: list[str] | None = None,
     ):
@@ -173,13 +175,8 @@ class CDCEngine:
         # than this many DELTA files is folded back into base files via a
         # bucket-scoped compact() — so read-side merge cost stays bounded
         # without operator intervention, and the compaction itself is
-        # O(selected buckets), never O(table). 0 disables. Env override:
-        # CDC_MOR_COMPACT_THRESHOLD.
-        self.mor_compact_threshold = (
-            mor_compact_threshold
-            if mor_compact_threshold is not None
-            else int(os.environ.get("CDC_MOR_COMPACT_THRESHOLD", "8"))
-        )
+        # O(selected buckets), never O(table). 0 disables.
+        self.mor_compact_threshold = mor_compact_threshold
         # 'cow' (default): a batch rewrites its affected buckets in full —
         # reads stay merge-free, writes pay amplification (measured 1.5-1.8x
         # on the updates-heavy bench). 'mor' (merge-on-read): a batch
@@ -190,25 +187,10 @@ class CDCEngine:
         self.write_mode = write_mode or os.environ.get("CDC_WRITE_MODE", "cow")
         if self.write_mode not in ("cow", "mor"):
             raise ValueError(f"write_mode must be 'cow' or 'mor', got {self.write_mode!r}")
-        # 'maxby' (default): union → repartition on the key → sort-agg
-        # max_by per key (one content exchange, no map-side collapse; the
-        # bucket write adds a second repartition unless n_buckets divides
-        # shuffle.partitions). 'bucket_pandas': ONE content shuffle —
-        # groupBy(__bucket) → Arrow applyInPandas LWW reduction → direct
-        # partitionBy write (the reduction output is already
-        # bucket-partitioned). Same semantics, golden-tested against the same
-        # oracle; see BENCH/BASELINE.md for the measured pick. Env override:
-        # CDC_MERGE=bucket_pandas.
-        self.merge_strategy = (
-            merge_strategy or os.environ.get("CDC_MERGE", "maxby")
-        )
         # parquet-native bloom filters for point probes on hash-like columns
         # (table-creation-time config, lives in table.json; existing tables
         # keep whatever they were created with). Opt-in: write cost is ~+3%
-        # file bytes + bloom-build CPU per batch. Env: CDC_BLOOM_COLS=commit
-        if bloom_cols is None:
-            env_bloom = os.environ.get("CDC_BLOOM_COLS", "")
-            bloom_cols = [c.strip() for c in env_bloom.split(",") if c.strip()] or None
+        # file bytes + bloom-build CPU per batch.
         if LakeVault.exists(table_root):
             self.vault = LakeVault.load(spark, table_root)
         else:
@@ -667,20 +649,15 @@ class CDCEngine:
             "schema_rows": schema_rows,
             "offsets": offsets,
             "buckets": sorted(int(b) for b in (stats.get("buckets") or [])),
-            "nshuffle": nshuffle,
         }
 
     def _data_phase(self, wal_dir: str, chunk: int, bid: str, ctrl: dict) -> BatchMetrics:
-        """Table-state-dependent half: schema evolution + single-aggregation
-        MERGE + bucket write + atomic commit. Strictly sequential across
-        batches (each snapshot builds on its parent)."""
-        spark = self.spark
+        """Table-state-dependent half: quarantine write, then schema evolution
+        + single-aggregation MERGE + bucket write + atomic commit. Strictly
+        sequential across batches (each snapshot builds on its parent)."""
         m: BatchMetrics = ctrl["m"]
         raw = ctrl["raw"]
-        schema_rows = ctrl["schema_rows"]
-        offsets = ctrl["offsets"]
         malformed = ctrl["malformed"]
-        _t0 = time.perf_counter()
 
         qfut = None
         if m.quarantined:
@@ -693,7 +670,7 @@ class CDCEngine:
             # a parallel job, never a serial driver-side funnel. r6: the job
             # runs on a side thread OVERLAPPING the merge job (guide §2.6 —
             # Spark back-fills its tasks into the merge's straggler tail) and
-            # is joined BEFORE the commit below, so the crash contract is
+            # is joined BEFORE the commit, so the crash contract is
             # unchanged: either both jobs finished and the batch commits, or
             # neither effect is visible to a resumed replay.
             from concurrent.futures import ThreadPoolExecutor
@@ -712,6 +689,27 @@ class CDCEngine:
             qpool = ThreadPoolExecutor(max_workers=1)
             qfut = qpool.submit(_qwrite)
             qpool.shutdown(wait=False)
+        try:
+            return self._merge_commit(wal_dir, chunk, bid, ctrl, qfut)
+        except BaseException:
+            # a failed batch never leaves its quarantine write running: an
+            # in-process retry of the batch would race it on the same qdir
+            if qfut is not None:
+                qfut.exception()  # waits; the batch's own error is the one raised
+            raise
+
+    def _merge_commit(
+        self, wal_dir: str, chunk: int, bid: str, ctrl: dict, qfut
+    ) -> BatchMetrics:
+        """Schema evolution + MERGE + bucket write + commit; joins the
+        quarantine write ``qfut`` (if any) before the commit."""
+        spark = self.spark
+        m: BatchMetrics = ctrl["m"]
+        raw = ctrl["raw"]
+        schema_rows = ctrl["schema_rows"]
+        offsets = ctrl["offsets"]
+        malformed = ctrl["malformed"]
+        _t0 = time.perf_counter()
 
         schema = self.vault.snapshot().schema
         for r in schema_rows:
@@ -797,8 +795,9 @@ class CDCEngine:
         # MERGE as ONE aggregation: batch events UNION existing rows of the
         # affected buckets; winner per (repo,path) is max_by over
         # (last_seq, src, content) — the composition of dedup-by-commit,
-        # LWW-by-path and table merge in a single partial-aggregated pass
-        # (skew-immune: the hot repo collapses map-side before the exchange).
+        # LWW-by-path and table merge in one pass over raw rows repartitioned
+        # on the key (no map-side collapse: every event of one hot key sorts
+        # on one reducer; see _merge_maxby).
         # scan() reads the PARENT snapshot (columns named per the PARENT
         # schema), so the re-projection onto the evolved schema maps by
         # COLUMN ID, not name — a column renamed this batch keeps its values
@@ -841,10 +840,7 @@ class CDCEngine:
         both = ex.unionByName(b_in, allowMissingColumns=True)
         val_cols = [c for c in both.columns if c not in ("repo", "path")]
         src = F.col("__src")
-        if self.merge_strategy == "bucket_pandas":
-            merged = self._merge_bucket_pandas(both)
-        else:
-            merged = self._merge_maxby(both, val_cols)
+        merged = self._merge_maxby(both, val_cols)
 
         live_old = F.col("old_seq").isNotNull() & ~F.coalesce(F.col("old_deleted"), F.lit(False))
 
@@ -1014,11 +1010,7 @@ class CDCEngine:
         # here before)
         shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
         wopts = self.vault.data_write_options()
-        if self.merge_strategy == "bucket_pandas":
-            # the pandas reduction's output is already hash(__bucket)-
-            # partitioned: write directly — this is the shuffle we saved
-            out.write.mode("overwrite").options(**wopts).partitionBy("__bucket").parquet(wd)
-        elif shuffle_p and shuffle_p % self.vault.n_buckets == 0:
+        if shuffle_p and shuffle_p % self.vault.n_buckets == 0:
             # bucket-aligned direct write: the merge agg's exchange is
             # HashPartitioning(repo, path, P) with pid = pmod(murmur3, P),
             # and __bucket = pmod(murmur3, n_buckets) over the same keys
@@ -1201,64 +1193,6 @@ class CDCEngine:
             )
             .withColumn("__bucket", self.vault.bucket_expr())
         )
-
-    def _merge_bucket_pandas(self, both: DataFrame) -> DataFrame:
-        """Single-shuffle merge: exchange once on __bucket (a pure function
-        of the key, so all rows of a key co-locate), then an Arrow-batched
-        pandas reduction does LWW per key inside each bucket. The output is
-        already partitioned by __bucket, so the bucket write needs NO second
-        repartition — total content-shuffle volume is halved vs 'maxby'
-        (minus the map-side dup collapse, ~the duplicate fraction).
-        Parallelism = number of affected buckets: size n_buckets ≥ cores
-        (compact(n_buckets=...) re-buckets grown tables). Ordering semantics
-        are IDENTICAL to max_by over (last_seq, src, content): pandas string
-        comparison is code-point order == Spark's UTF8String byte order."""
-        import pandas as pd  # noqa: F401  (worker-side)
-        from pyspark.sql.types import BooleanType, LongType, StructField, StructType
-
-        withb = both.withColumn("__bucket", self.vault.bucket_expr())
-        out_schema = StructType(
-            list(withb.schema.fields)
-            + [
-                StructField("old_seq", LongType()),
-                StructField("new_seq", LongType()),
-                StructField("old_deleted", BooleanType()),
-                StructField("n_events", LongType()),
-            ]
-        )
-        names = [f.name for f in out_schema.fields]
-
-        def reduce_bucket(pdf):
-            import pandas as pd
-
-            key = ["repo", "path"]
-            pdf = pdf.assign(__ck=pdf["content"].fillna("")).sort_values(
-                key + ["last_seq", "__src", "__ck"], kind="mergesort"
-            )
-            g = pdf.groupby(key, sort=False)
-            w = g.tail(1).drop(columns="__ck")
-            stats = (
-                pdf.assign(
-                    _os=pdf["last_seq"].where(pdf["__src"] == 0),
-                    _ns=pdf["last_seq"].where(pdf["__src"] == 1),
-                    _od=pdf["is_deleted"].where(pdf["__src"] == 0),
-                )
-                .groupby(key, sort=False)
-                .agg(
-                    old_seq=("_os", "max"),
-                    new_seq=("_ns", "max"),
-                    old_deleted=("_od", "max"),
-                    n_events=("__src", "sum"),
-                )
-                .reset_index()
-            )
-            out = w.merge(stats, on=key, how="left")
-            out["old_deleted"] = out["old_deleted"].astype(object).where(
-                out["old_deleted"].notna(), None
-            )
-            return out.reindex(columns=names)
-
-        return withb.groupBy("__bucket").applyInPandas(reduce_bucket, out_schema)
 
     def _apply_chunk(self, wal_dir: str, chunk: int, bid: str) -> BatchMetrics:
         ctrl = self._control_phase(wal_dir, chunk, bid)

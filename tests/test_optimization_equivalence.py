@@ -2,6 +2,7 @@
 pre-optimization reference implementation on real corpora.
 
 - _shingles: regex lookahead extraction == the sequence/transform/slice HOF
+  (same arrays: order and multiplicity included)
 - quality_score punct count: translate keep-set == the regex char class
 - exact_percentiles helper: two-phase selection == native percentile()
 """
@@ -46,10 +47,14 @@ def test_shingles_regex_equals_hof(spark):
             # (greatest(null,0)=0 -> concat_ws over a null slice); the regex
             # path yields none, matching the DuckDB oracle's unnest(null) —
             # compare on non-null text and pin the null behavior separately
-            nn = df.where(F.col("text").isNotNull())
-            a = nn.select("doc_id", F.explode(F.array_distinct(_shingles(F.col("text"), k))).alias("s"))
-            b = nn.select("doc_id", F.explode(F.array_distinct(_hof_shingles(F.col("text"), k))).alias("s"))
-            assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, f"k={k}"
+            # raw arrays, not distinct sets: order and multiplicity must match
+            nn = df.where(F.col("text").isNotNull()).select(
+                "doc_id",
+                _shingles(F.col("text"), k).alias("a"),
+                _hof_shingles(F.col("text"), k).alias("b"),
+            )
+            bad = nn.where(~F.col("a").eqNullSafe(F.col("b"))).limit(5).collect()
+            assert not bad, f"k={k}: {bad}"
         nulls = extra.where(F.col("text").isNull()).select(
             F.explode(F.array_distinct(_shingles(F.col("text"), k))).alias("s")
         )

@@ -95,3 +95,42 @@ def test_rollup_backfill_on_resume(spark, tmp_path):
     assert os.path.isdir(gone)  # rollup hole backfilled
     roll = spark.read.parquet(eng.metrics_dir)
     assert roll.where(f"batch_id = '{applied[0].batch_id}'").count() > 0
+
+
+def test_failed_batch_joins_its_quarantine_write(spark, tmp_path, wal, monkeypatch):
+    """A batch that fails in the merge must not leave its quarantine write
+    running in the background: an in-process retry of the same batch would
+    race it on the same quarantine dir."""
+    import threading
+    import time
+
+    from pyspark.sql import DataFrameWriter
+
+    real_parquet = DataFrameWriter.parquet
+    finished = threading.Event()
+
+    def slow_quarantine(self, path, *a, **kw):
+        if "quarantine" not in path:
+            return real_parquet(self, path, *a, **kw)
+        time.sleep(2)  # still in flight when the merge raises
+        real_parquet(self, path, *a, **kw)
+        finished.set()
+
+    def failing_merge(*_a, **_kw):
+        raise RuntimeError("merge failed")
+
+    root = str(tmp_path / "q")
+    eng = CDCEngine(spark, root, n_buckets=8)
+    monkeypatch.setattr(DataFrameWriter, "parquet", slow_quarantine)
+    monkeypatch.setattr(eng, "_merge_maxby", failing_merge)
+    with pytest.raises(RuntimeError, match="merge failed"):
+        eng.replay(wal, max_batches=1)
+    assert finished.is_set(), "quarantine write outlived the failed batch"
+    monkeypatch.undo()
+
+    # the retry rewrites the same batch's quarantine rows exactly once
+    res = CDCEngine(spark, root, n_buckets=8).replay(wal, max_batches=1)
+    b = res.batches[0]
+    assert b.quarantined > 0 and b.conserved()
+    q = spark.read.parquet(f"{root}/quarantine/batch_id={b.batch_id}")
+    assert q.count() == b.quarantined

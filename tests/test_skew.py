@@ -1,6 +1,8 @@
 """Skew: one hot repo holding ≥50% of events must not break or imbalance the
-replay (SURVEY.md §5 test plan; dedup via partial-agg max_by is the design
-that makes this safe — see operators/dedup.py docstring)."""
+replay (SURVEY.md §5 test plan). The merge repartitions raw rows on
+(repo, path) before its max_by, so a hot repo spreads over its paths; a
+single hot (repo, path) key still sorts on one reducer, and
+operators/dedup.py::salted_repartition is the two-level escape hatch."""
 
 import pyspark.sql.functions as F
 

@@ -87,6 +87,10 @@ def test_edge_cases_equivalence(spark):
         ("i", "p.md", "mail me a@b.co password: hunter2 Bearer abcdefgh1234"),
         ("i", "p.md", "4111 1111 1111 1111 and 10.0.0.7"),
         ("weird-op", "p.sql", ""),                  # empty content -> update
+        ("\tdelete\n", "w.py", "x"),                # padded ops strip all whitespace
+        (" rm\t", "w.py", "x"),
+        ("insert\r\n", "w.py", "x"),
+        ("\u00a0d\u3000", "w.py", "x"),             # Unicode spaces, as str.strip()
     ]
     df = spark.createDataFrame(rows, "op string, path string, content string")
     _compare(df)
