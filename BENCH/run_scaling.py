@@ -46,7 +46,7 @@ from observability_platform___databricks_etl_pipeline_spark.functions.sanitize i
 
 cpus = {cpus}
 n_events = {events}
-spark = get_spark(master=f"local[{{cpus}}]", shuffle_partitions=32,  # same plan at every level; 32 | n_buckets=32 keeps the bucket-aligned write
+spark = get_spark(master=f"local[{{cpus}}]", shuffle_partitions=32,  # same plan at every level
                   extra_conf={{"spark.local.dir": "/dev/shm/spark-local"}})
 spark.sparkContext.setLogLevel("ERROR")
 # warm JVM + python workers so the measurement is steady-state

@@ -1,13 +1,18 @@
-"""Language inference for source files: extension map + content heuristics.
+r"""Language inference for source files: extension map + content heuristics.
 
 Reference semantics: severity/keyword classification done per-row on the
 driver (``00_ingest_from_loghub.py:233``, ``10_dashboard_video.py:133-142``)
 recast for the CDC engine's input shape ``(repo, path, commit, lang, content)``
 — infer ``lang`` when the WAL event carries none. Vectorized: extension lookup
 via ``Series.str.extract`` + ``map``, shebang/keyword fallback via ``str.contains``.
+``\w`` and ``\s`` are ASCII-only on both paths (``re.ASCII`` here, Java's
+default natively), so ``def café(`` is not a Python signature; the ``\b``
+residual in ``functions/sanitize.py``'s docstring applies here too.
 """
 
 from __future__ import annotations
+
+import re
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -51,10 +56,10 @@ def infer_lang_series(path: pd.Series, content: pd.Series) -> pd.Series:
         c = content.where(lang.isna(), "").fillna("")
         rules = [
             (c.str.startswith("#!/bin/"), "shell"),
-            (c.str.contains(r"#!.*\bpython", regex=True), "python"),
-            (c.str.contains(r"\bdef \w+\(|\bimport \w+", regex=True), "python"),
-            (c.str.contains(r"\bfn \w+\(.*\)\s*->", regex=True), "rust"),
-            (c.str.contains(r"\bfunc \w+\(", regex=True), "go"),
+            (c.str.contains(r"#!.*\bpython", regex=True, flags=re.ASCII), "python"),
+            (c.str.contains(r"\bdef \w+\(|\bimport \w+", regex=True, flags=re.ASCII), "python"),
+            (c.str.contains(r"\bfn \w+\(.*\)\s*->", regex=True, flags=re.ASCII), "rust"),
+            (c.str.contains(r"\bfunc \w+\(", regex=True, flags=re.ASCII), "go"),
         ]
         for cond, val in rules:
             lang = lang.mask(lang.isna() & cond, val)
@@ -85,12 +90,3 @@ def infer_lang_expr(path: "F.Column", content: "F.Column") -> "F.Column":
         .when(c.rlike(r"\bfunc \w+\("), F.lit("go"))
     )
     return F.coalesce(by_ext, rules, F.lit("unknown"))
-
-
-def lang_from_extension_expr(path_col: str) -> "F.Column":
-    """Native CASE-chain over the extension map (oracle-replicable in SQL)."""
-    ext = F.lower(F.regexp_extract(F.col(path_col), r"\.([A-Za-z0-9]+)$", 1))
-    expr = F.lit("unknown")
-    for k, v in reversed(list(EXT_LANG.items())):
-        expr = F.when(ext == k, v).otherwise(expr)
-    return expr

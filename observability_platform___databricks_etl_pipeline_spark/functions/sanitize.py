@@ -1,4 +1,4 @@
-"""Content sanitization (PII/secret redaction) as a vectorized pandas UDF.
+r"""Content sanitization (PII/secret redaction) as a vectorized pandas UDF.
 
 Reference semantics: ``docs/PRODUCTION_DATA_GUIDE.md:64-99`` (``sanitize_log``:
 email / credit-card / IP redaction + secret masking, written there as per-row
@@ -7,9 +7,22 @@ driver Python with ``re.sub``). Re-expressed as Arrow-batched
 rule. Idempotent: sanitize(sanitize(x)) == sanitize(x) (the replacement tokens
 match none of the patterns), which the test suite asserts because the engine
 may re-run a batch after a crash-before-commit.
+
+Regex contract: ``\d``, ``\w`` and ``\s`` are ASCII-only on every path —
+Java's defaults (native path), RE2's (DuckDB oracle) and ``re.ASCII`` here —
+so fullwidth or Arabic-Indic digits are never redacted as card numbers or
+IPs, and a non-breaking space does not separate ``bearer`` from its token.
+``re.ASCII`` also keeps ``(?i)`` ASCII-only here, as it is in Java. Two
+residuals: Java 17's ``\b`` counts any Unicode letter or digit as a word
+character, so a digit run that directly touches a non-ASCII letter
+(``é4111 1111 1111 1111``) is kept natively but redacted here and by RE2;
+and RE2's ``(?i)`` folds ``ſ`` into ``s``, so the oracle redacts
+``ſecret=x``, which both engine paths keep.
 """
 
 from __future__ import annotations
+
+import re
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -33,10 +46,11 @@ _PATTERNS: list[tuple[str, str]] = [
 
 
 def sanitize_series(s: pd.Series) -> pd.Series:
-    """Vectorized redaction over a pandas Series of strings (nulls pass through)."""
+    """Vectorized redaction over a pandas Series of strings (nulls pass
+    through); ASCII character classes, as the module docstring states."""
     out = s
     for pat, repl in _PATTERNS:
-        out = out.str.replace(pat, repl, regex=True)
+        out = out.str.replace(pat, repl, regex=True, flags=re.ASCII)
     return out
 
 

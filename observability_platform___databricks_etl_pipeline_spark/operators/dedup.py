@@ -155,22 +155,6 @@ def _shingles(text_col: Column, k: int = 5) -> Column:
     return F.when(F.size(sh) == 0, F.array(norm)).otherwise(sh)
 
 
-def minhash_signature(text_col: Column, num_hashes: int = 32, k: int = 5) -> Column:
-    """MinHash signature as a single column expression (array_min over
-    transform per hash function). NOTE: only for small num_hashes / ad-hoc
-    use — the expression tree embeds the shingle expression per hash function
-    and codegen compile time blows up. The scale path is
-    ``minhash_signatures`` (explode → partial-agg), used by the LSH operator."""
-    sh = F.array_distinct(_shingles(text_col, k))
-    sigs = [
-        F.array_min(
-            F.transform(sh, lambda s: md5long(s).bitwiseXOR(F.lit(md5long_constant(i))))
-        ).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
-    return F.array(*sigs)
-
-
 def _spread(df: DataFrame, *cols: str) -> DataFrame:
     """Repartition a narrow input before a fan-out (shingle/token explode) if
     it arrives from too few files — a single-file parquet corpus otherwise

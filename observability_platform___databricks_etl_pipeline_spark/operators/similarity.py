@@ -154,25 +154,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim))
 
 
-def rhp_bucket_expr(vec_col: Column, planes: np.ndarray) -> Column:
-    """Sign-pattern bucket id from n random hyperplanes (native fold per
-    plane). Kept as the pure-Catalyst reference implementation; the hot
-    paths use ``_corpus_bucket_udf`` — the n_planes × dim literal tree costs
-    more in driver-side analysis than the scan it decorates (the r2/r3
-    Catalyst-literal-tree lesson), while one Arrow matmul per batch is
-    ~free. Sign agreement between the two (and DuckDB's list_dot_product
-    order) is a non-issue in practice: a disagreement needs |dot| within
-    ~1e-15·||v||·||p|| of zero; the gate corpus' closest margin is 5e-5."""
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(x)).cast("double") for x in plane])
-        bit = F.when(_dot(vec_col, p) > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bucket.bitwiseOR(bit)
-    return bucket
-
-
 def _corpus_bucket_udf(planes: np.ndarray):
     """Arrow-batched corpus bucketing: ONE BLAS matmul per record batch
     replaces the n_planes × dim literal fold tree. Callers must pre-filter

@@ -879,10 +879,11 @@ class LakeVault:
     def bucket_expr(self, df_or_cols: Any = None) -> F.Column:
         # Murmur3 (F.hash, seed 42) over the RAW key columns — bit-identical
         # to Spark's HashPartitioning partition id (pmod(murmur3(keys), n)).
-        # This alignment is load-bearing: when n_buckets divides
-        # spark.sql.shuffle.partitions, the output of any groupBy(key_cols)
-        # is ALREADY bucket-partitioned, so the engine's bucket write needs
-        # no second shuffle (see replay._data_phase).
+        # This alignment is load-bearing: the replay merge repartitions on
+        # key_cols into a divisor or multiple of n_buckets partitions, so each
+        # write task holds whole buckets or a slice of one bucket, and the
+        # bucket write keeps files per bucket bounded with no second shuffle
+        # (see replay._merge_maxby).
         fn = self.table_meta.get("bucket_fn")
         if fn != BUCKET_FN:
             raise ValueError(

@@ -25,12 +25,14 @@ job 2 (data plane):
     (repo, path) — the composition of dedup-by-(repo,path,commit), LWW and
     table merge in one pass over raw rows repartitioned on the key first (no
     map-side collapse: a hot repo spreads over its paths, but every event of
-    one hot (repo, path) sorts on one reducer)                     [1 shuffle]
+    one hot (repo, path) sorts on one reducer); the exchange's partitions
+    line up with the table's buckets                             [1 shuffle]
   - fused transform (classify + sanitize + lang-infer as native codegen
     expressions; sha256 via native ``F.sha2``), applied only where the
     batch won
   - merge action counts + dedup accounting ride the bucket write via a
-    second ``df.observe``; write replaced buckets   [1 write repartition]
+    second ``df.observe``; write replaced buckets straight from the
+    aggregate's output (no second exchange, no second sort)
 
 then the atomic commit: manifest → snapshot → version-pointer ``os.replace``.
 Schema-evolution note: schema ops act as chunk-aligned barriers (applied
@@ -579,7 +581,6 @@ class CDCEngine:
         spark = self.spark
         m = BatchMetrics(batch_id=bid, chunk=chunk)
         _t0 = time.perf_counter()
-        nshuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
         malformed = (
             F.col("seq").isNull()
@@ -610,13 +611,8 @@ class CDCEngine:
         # No up-front repartition/cache: the merge aggregation below does its
         # own exchange, so repartitioning here would be a second full shuffle
         # of the batch, and caching a batch that is read ~2x from fast
-        # columnar parquet wastes memory. Single-file chunks (unsplittable →
-        # single-task scan) are the one case where an explicit spread pays.
+        # columnar parquet wastes memory.
         raw = read_chunk(spark, wal_dir, chunk)
-        chunk_dir = os.path.join(wal_dir, f"chunk={chunk}")
-        n_files = sum(1 for f in os.listdir(chunk_dir) if f.endswith(".parquet"))
-        if n_files < max(4, nshuffle // 4):
-            raw = raw.repartition(nshuffle, "repo", "path")
         # narrow control-plane view: job 1 below needs only the key/identity
         # columns, op and props (schema events) — content (~80% of the
         # bytes), ts and lang are never decoded here (r6: ts/lang dropped
@@ -703,7 +699,6 @@ class CDCEngine:
     ) -> BatchMetrics:
         """Schema evolution + MERGE + bucket write + commit; joins the
         quarantine write ``qfut`` (if any) before the commit."""
-        spark = self.spark
         m: BatchMetrics = ctrl["m"]
         raw = ctrl["raw"]
         schema_rows = ctrl["schema_rows"]
@@ -990,7 +985,6 @@ class CDCEngine:
                     f.write(plan)
             except Exception:
                 pass
-        n_out = max(len(affected), 1)
         wd = self.vault.new_write_dir(bid[:8])
         if self.write_mode == "mor":
             # merge-on-read: append ONLY this batch's winner rows (incl.
@@ -1000,33 +994,15 @@ class CDCEngine:
             out = out.where(
                 F.col("__action").isin("insert", "update", "delete", "delete_noop")
             )
-        # no per-batch sortWithinPartitions: key-clustering for scan locality
-        # is compact()'s job (the Z-order analog runs as maintenance, not on
-        # the hot path — sorting the whole table every batch bought nothing)
-        # no-default get: Spark 4 VALIDATES a fallback passed to conf.get
-        # ("0" is rejected), and the no-arg form returns the session's
-        # EFFECTIVE value anyway — exactly what the alignment check needs
-        # (a plain spark-submit session without an explicit setting crashed
-        # here before)
-        shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        wopts = self.vault.data_write_options()
-        if shuffle_p and shuffle_p % self.vault.n_buckets == 0:
-            # bucket-aligned direct write: the merge agg's exchange is
-            # HashPartitioning(repo, path, P) with pid = pmod(murmur3, P),
-            # and __bucket = pmod(murmur3, n_buckets) over the same keys
-            # (bucket_expr) — with n_buckets | P every reduce task holds
-            # exactly one bucket (a few adjacent ones after AQE coalesce),
-            # so partitionBy lands the same file layout with NO second
-            # content shuffle. This halves shuffle bytes per batch.
-            out.write.mode("overwrite").options(**wopts).partitionBy("__bucket").parquet(wd)
-        else:
-            (
-                out.repartition(n_out, "__bucket")
-                .write.mode("overwrite")
-                .options(**wopts)
-                .partitionBy("__bucket")
-                .parquet(wd)
-            )
+        # The merge output arrives bucket-aligned per task and sorted by
+        # (__bucket, repo, path) (_merge_maxby), so this write adds no
+        # Exchange and no Sort, and each bucket file comes out key-sorted.
+        (
+            out.write.mode("overwrite")
+            .options(**self.vault.data_write_options())
+            .partitionBy("__bucket")
+            .parquet(wd)
+        )
         acts = obs_out.get
         m.inserted = int(acts["inserted"] or 0)
         m.updated = int(acts["updated"] or 0)
@@ -1163,15 +1139,26 @@ class CDCEngine:
         pathologically hot (repo, path) key no longer collapses map-side —
         its rows sort on one reduce task; two-level (key, salt) aggregation
         remains the escape hatch for that shape (operators/dedup.py::
-        salted_repartition). The repartition's HashPartitioning(repo, path)
-        is murmur3-aligned with bucket_expr, so the bucket write downstream
-        stays shuffle-free when n_buckets divides shuffle.partitions."""
+        salted_repartition).
+
+        Bucket-aligned: the exchange is HashPartitioning(repo, path, n) and
+        __bucket = pmod(murmur3(repo, path), n_buckets) (bucket_expr). n is
+        shuffle.partitions P when P divides n_buckets (each task holds whole
+        buckets), else the smallest multiple of n_buckets ≥ P (each task holds
+        one bucket; a bucket spans n / n_buckets tasks and files). Grouping by
+        (__bucket, repo, path) makes the agg's input sort — and so its output
+        order — start with __bucket, which is all partitionBy("__bucket")
+        needs: the write adds no Exchange and no Sort (one shuffle and one
+        sort per batch)."""
         src = F.col("__src")
         wpay = F.struct(*[F.col(c) for c in val_cols])
-        nshuffle = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        nb = self.vault.n_buckets
+        p = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        n = p if nb % p == 0 else -(-p // nb) * nb
         return (
-            both.repartition(nshuffle, "repo", "path")
-            .groupBy("repo", "path")
+            both.withColumn("__bucket", self.vault.bucket_expr())
+            .repartition(n, "repo", "path")
+            .groupBy("__bucket", "repo", "path")
             .agg(
                 F.max_by(
                     wpay,
@@ -1190,8 +1177,8 @@ class CDCEngine:
                 "new_seq",
                 "old_deleted",
                 "n_events",
+                "__bucket",
             )
-            .withColumn("__bucket", self.vault.bucket_expr())
         )
 
     def _apply_chunk(self, wal_dir: str, chunk: int, bid: str) -> BatchMetrics:

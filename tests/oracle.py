@@ -9,7 +9,8 @@ same declared semantics as the engine (FIXTURES.md §5):
   semantics),
 - op classification fallback, sanitization, sha256 and lang inference are
   re-implemented here independently (plain ``re`` / ``hashlib`` / dict logic,
-  not the engine's pandas code) so the comparison is meaningful,
+  not the engine's pandas code) so the comparison is meaningful; ``re.ASCII``
+  follows the engine's ASCII-only regex contract (functions/sanitize.py),
 - last-writer-wins per (repo, path) by seq; deletes are tombstones.
 """
 
@@ -55,7 +56,7 @@ def sanitize(text: str | None) -> str | None:
     if text is None:
         return None
     for pat, repl in _PATTERNS:
-        text = re.sub(pat, repl, text)
+        text = re.sub(pat, repl, text, flags=re.ASCII)
     return text
 
 
@@ -66,13 +67,13 @@ def infer_lang(path: str, content: str | None) -> str:
     c = content or ""
     if c.startswith("#!/bin/"):
         return "shell"
-    if re.search(r"#!.*\bpython", c):
+    if re.search(r"#!.*\bpython", c, re.ASCII):
         return "python"
-    if re.search(r"\bdef \w+\(|\bimport \w+", c):
+    if re.search(r"\bdef \w+\(|\bimport \w+", c, re.ASCII):
         return "python"
-    if re.search(r"\bfn \w+\(.*\)\s*->", c):
+    if re.search(r"\bfn \w+\(.*\)\s*->", c, re.ASCII):
         return "rust"
-    if re.search(r"\bfunc \w+\(", c):
+    if re.search(r"\bfunc \w+\(", c, re.ASCII):
         return "go"
     return "unknown"
 

@@ -6,6 +6,8 @@ scan, small dims broadcast, aggregations keep map-side partial aggregation
 TakeOrderedAndProject rather than a global sort.
 """
 
+import re
+
 import pyspark.sql.functions as F
 
 from observability_platform___databricks_etl_pipeline_spark.queries import QUERIES
@@ -51,6 +53,22 @@ def test_topk_plans_as_take_ordered(spark, sf01_dir):
     assert "TakeOrderedAndProject" in plan
 
 
+def test_q3_orders_side_is_not_force_broadcast(spark, sf01_dir):
+    """q3 hints only the customer dimension: with broadcasting disabled by
+    size, the lineitem ⋈ filtered-orders join must not be a BroadcastHashJoin
+    (no unconditional broadcast of a relation derived from a fact table)."""
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        plan = _plan(QUERIES["q3_shipping_priority"](spark, sf01_dir))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    joins = re.findall(r"(\w+Join) \[([^\]]*)\]", plan)
+    li_joins = [j for j, keys in joins if "l_orderkey" in keys]
+    assert li_joins and "BroadcastHashJoin" not in li_joins, joins
+    assert "BroadcastHashJoin" in [j for j, keys in joins if "o_custkey" in keys], joins
+
+
 def test_anti_join_strategy(spark, sf01_dir):
     plan = _plan(QUERIES["join_anti_inactive_parts"](spark, sf01_dir))
     assert "LeftAnti" in plan
@@ -63,29 +81,60 @@ def test_wholestage_codegen_on_text_ops(spark, sf01_dir):
     assert "Python" not in plan
 
 
+def _final_plan_tree(desc: str) -> list[str]:
+    """Operator names of an AQE plan's final tree, top-down, from a status
+    store ``physicalPlanDescription`` (the tree is the first paragraph)."""
+    tree = desc.split("\n\n")[0]
+    if "== Final Plan ==" in tree:
+        tree = tree.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    return re.findall(r"([A-Za-z][A-Za-z ]*?) \(\d+\)", tree)
+
+
 def test_engine_merge_has_single_exchange_per_side(spark, tmp_path):
-    """The MERGE aggregation adds exactly one exchange over the union (plus
-    the write repartition) — no redundant shuffles (SURVEY §4 shuffle row)."""
+    """The executed merge-write plan shuffles once and sorts once: the one
+    Exchange feeds the Sort under the max_by SortAggregate, whose output
+    (ordered by __bucket) goes to WriteFiles with no Exchange and no Sort
+    between them — at 4 buckets (n_buckets divides shuffle.partitions = 8)
+    and at 16 (shuffle.partitions divides n_buckets). Also: scan() prunes by
+    bucket."""
     from observability_platform___databricks_etl_pipeline_spark.gen.changelog import (
         generate_changelog,
         write_wal,
     )
     from observability_platform___databricks_etl_pipeline_spark.plans.replay import CDCEngine
 
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == 8
     wal = str(tmp_path / "wal")
     write_wal(generate_changelog(spark, 2000, seed=3), wal, chunk_size=2000)
-    eng = CDCEngine(spark, str(tmp_path / "t"), n_buckets=4, with_rollup=False)
-    eng.replay(wal)
-    # scan path: bucket pruning keeps non-matching files out of the plan
-    snap = eng.vault.snapshot()
-    some_bucket = snap.files[0]["bucket"]
-    pruned = eng.vault.scan(buckets=[some_bucket])
-    full = eng.vault.scan()
-    n_pruned = len([f for f in snap.files if f["bucket"] == some_bucket])
-    assert pruned.count() == sum(
-        f["rows"] for f in snap.files if f["bucket"] == some_bucket
-    )
-    assert n_pruned < len(snap.files)
+    store = spark._jsparkSession.sharedState().statusStore()
+    for n_buckets in (4, 16):
+        eng = CDCEngine(
+            spark, str(tmp_path / f"t{n_buckets}"), n_buckets=n_buckets, with_rollup=False
+        )
+        eng.replay(wal)
+
+        execs = store.executionsList()
+        descs = [execs.apply(i).physicalPlanDescription() for i in range(execs.size())]
+        writes = [
+            d for d in descs if "InsertIntoHadoopFsRelationCommand" in d and "SortAggregate" in d
+        ]
+        assert writes, "no merge write found in the SQL status store"
+        ops = _final_plan_tree(writes[-1])
+        assert ops.count("Exchange") == 1, (n_buckets, ops)
+        assert ops.count("Sort") == 1, (n_buckets, ops)
+        agg = ops.index("SortAggregate")
+        assert "Sort" not in ops[ops.index("WriteFiles") : agg], (n_buckets, ops)
+        assert ops[agg:].index("Sort") < ops[agg:].index("Exchange"), (n_buckets, ops)
+
+        # scan path: bucket pruning keeps non-matching files out of the plan
+        snap = eng.vault.snapshot()
+        some_bucket = snap.files[0]["bucket"]
+        pruned = eng.vault.scan(buckets=[some_bucket])
+        n_pruned = len([f for f in snap.files if f["bucket"] == some_bucket])
+        assert pruned.count() == sum(
+            f["rows"] for f in snap.files if f["bucket"] == some_bucket
+        )
+        assert n_pruned < len(snap.files)
 
 
 def test_key_range_pruning_after_compact(spark, tmp_path):

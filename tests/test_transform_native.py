@@ -91,6 +91,11 @@ def test_edge_cases_equivalence(spark):
         (" rm\t", "w.py", "x"),
         ("insert\r\n", "w.py", "x"),
         ("\u00a0d\u3000", "w.py", "x"),             # Unicode spaces, as str.strip()
+        # ASCII-only regex classes on every path (functions/sanitize.py):
+        ("i", "p.md", " ".join(["\uff11" * 4] * 4)),  # fullwidth card number
+        ("i", "p.md", "\uff11\uff10.\uff10.\uff10.\uff17"),     # fullwidth IP
+        ("i", "p.md", "bearer\u00a0abcdefgh1234"),  # NBSP is not \s
+        ("i", "c.zzz", "def caf\u00e9(x):"),         # \w+ stops at the accent
     ]
     df = spark.createDataFrame(rows, "op string, path string, content string")
     _compare(df)
