@@ -6,6 +6,7 @@ Not part of the frozen driver contract (bench.py is untouched). Modes:
   python bench_extra.py plans [out_dir]      # .explain('formatted') per headline query
   python bench_extra.py time  [names...]     # median-of-3 noop-sink timing per query
   python bench_extra.py replay [n_events]    # one replay with CDC_TIMING=1 phases
+  python bench_extra.py reads  [rounds]      # plan/exec p50 + plan-time jobs per read
 
 $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS as in bench.py.
 """
@@ -156,6 +157,78 @@ def cmd_replay(n_events: int) -> None:
         shutil.rmtree(tbl, ignore_errors=True)
 
 
+def cmd_reads(rounds: int = 6) -> None:
+    """Plan and execute the engine's reads on a tail-shaped table: a
+    20k-event WAL in 4 chunks of 5k events at 8 paths per repo, chunk 0
+    preloaded, then chunks 1-3 replayed one call each. For ``scan``
+    (``current_state``), ``lookup``, ``changes`` (the last batch) and a
+    ``format("lakevault")`` read, prints the plan p50 (building the
+    DataFrame), the exec p50 (a noop-sink write) and the Spark jobs
+    submitted while planning, summed over ``rounds``."""
+    import shutil
+    import tempfile
+
+    spark = _spark()
+    _warmup(spark)
+    from observability_platform___databricks_etl_pipeline_spark.gen.changelog import (
+        generate_changelog,
+        write_wal,
+    )
+    from observability_platform___databricks_etl_pipeline_spark.plans.replay import CDCEngine
+    from observability_platform___databricks_etl_pipeline_spark.sources.lakevault_ds import (
+        register,
+    )
+
+    register(spark)
+    base = tempfile.mkdtemp(prefix="cdc-bx-reads-")
+    try:
+        wal, tbl = f"{base}/wal", f"{base}/tbl"
+        write_wal(generate_changelog(spark, 20_000, n_paths=8, seed=11), wal, chunk_size=5_000)
+        eng = CDCEngine(spark, tbl)
+        for chunk in range(4):
+            eng.replay(wal, chunks=[chunk])
+        head = eng.vault.current_snapshot_id()
+        kinds = {
+            "scan": eng.current_state,
+            "lookup": lambda: eng.lookup("org/hot-repo"),
+            "changes": lambda: eng.changes(head - 1),
+            "ds_scan": lambda: spark.read.format("lakevault").load(tbl),
+        }
+        jsc = spark.sparkContext._jsc.sc()
+        store = jsc.statusStore()
+
+        def n_jobs() -> int:
+            jsc.listenerBus().waitUntilEmpty()
+            return store.jobsList(None).size()
+
+        per = {k: {"plan": [], "exec": [], "plan_jobs": 0} for k in kinds}
+        for r in range(rounds + 1):  # round 0 warms every kind up
+            for kind, build in kinds.items():
+                j0 = n_jobs()
+                t0 = time.perf_counter()
+                df = build()
+                plan_s = time.perf_counter() - t0
+                j1 = n_jobs()
+                t0 = time.perf_counter()
+                _materialize(df)
+                exec_s = time.perf_counter() - t0
+                if r:
+                    per[kind]["plan"].append(plan_s)
+                    per[kind]["exec"].append(exec_s)
+                    per[kind]["plan_jobs"] += j1 - j0
+        out = {
+            k: {
+                "plan_p50_s": round(statistics.median(v["plan"]), 3),
+                "exec_p50_s": round(statistics.median(v["exec"]), 3),
+                "plan_jobs": v["plan_jobs"],
+            }
+            for k, v in per.items()
+        }
+        print(json.dumps({"rounds": rounds, "reads": out}, indent=1))
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "time"
     if mode == "plans":
@@ -165,5 +238,7 @@ if __name__ == "__main__":
         cmd_time(sys.argv[2:])
     elif mode == "replay":
         cmd_replay(int(sys.argv[2]) if len(sys.argv) > 2 else 2_000_000)
+    elif mode == "reads":
+        cmd_reads(int(sys.argv[2]) if len(sys.argv) > 2 else 6)
     else:
         raise SystemExit(f"unknown mode {mode}")

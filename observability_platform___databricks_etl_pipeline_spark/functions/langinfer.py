@@ -6,8 +6,9 @@ recast for the CDC engine's input shape ``(repo, path, commit, lang, content)``
 — infer ``lang`` when the WAL event carries none. Vectorized: extension lookup
 via ``Series.str.extract`` + ``map``, shebang/keyword fallback via ``str.contains``.
 ``\w`` and ``\s`` are ASCII-only on both paths (``re.ASCII`` here, Java's
-default natively), so ``def café(`` is not a Python signature; the ``\b``
-residual in ``functions/sanitize.py``'s docstring applies here too.
+default natively), so ``def café(`` is not a Python signature. ``\b`` is
+ASCII on both paths too: the native rules spell it out over ``\w``
+(``functions/sanitize.py::java_regex``), so ``édef f(x):`` is Python.
 """
 
 from __future__ import annotations
@@ -17,6 +18,8 @@ import re
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
+
+from observability_platform___databricks_etl_pipeline_spark.functions.sanitize import java_regex
 
 EXT_LANG: dict[str, str] = {
     "py": "python",
@@ -84,9 +87,9 @@ def infer_lang_expr(path: "F.Column", content: "F.Column") -> "F.Column":
     c = F.coalesce(content, F.lit(""))
     rules = (
         F.when(c.startswith("#!/bin/"), F.lit("shell"))
-        .when(c.rlike(r"#!.*\bpython"), F.lit("python"))
-        .when(c.rlike(r"\bdef \w+\(|\bimport \w+"), F.lit("python"))
-        .when(c.rlike(r"\bfn \w+\(.*\)\s*->"), F.lit("rust"))
-        .when(c.rlike(r"\bfunc \w+\("), F.lit("go"))
+        .when(c.rlike(java_regex(r"#!.*\bpython")), F.lit("python"))
+        .when(c.rlike(java_regex(r"\bdef \w+\(|\bimport \w+")), F.lit("python"))
+        .when(c.rlike(java_regex(r"\bfn \w+\(.*\)\s*->")), F.lit("rust"))
+        .when(c.rlike(java_regex(r"\bfunc \w+\(")), F.lit("go"))
     )
     return F.coalesce(by_ext, rules, F.lit("unknown"))

@@ -12,12 +12,11 @@ Regex contract: ``\d``, ``\w`` and ``\s`` are ASCII-only on every path —
 Java's defaults (native path), RE2's (DuckDB oracle) and ``re.ASCII`` here —
 so fullwidth or Arabic-Indic digits are never redacted as card numbers or
 IPs, and a non-breaking space does not separate ``bearer`` from its token.
-``re.ASCII`` also keeps ``(?i)`` ASCII-only here, as it is in Java. Two
-residuals: Java 17's ``\b`` counts any Unicode letter or digit as a word
-character, so a digit run that directly touches a non-ASCII letter
-(``é4111 1111 1111 1111``) is kept natively but redacted here and by RE2;
-and RE2's ``(?i)`` folds ``ſ`` into ``s``, so the oracle redacts
-``ſecret=x``, which both engine paths keep.
+``re.ASCII`` also keeps ``(?i)`` ASCII-only here, as it is in Java. Java 17's
+``\b`` counts any Unicode letter or digit as a word character, so the native
+path spells a word boundary out over ASCII ``\w`` (``JAVA_ASCII_WB``); RE2's
+``\b`` is already ASCII. One residual: RE2's ``(?i)`` folds ``ſ`` into ``s``,
+so the oracle redacts ``ſecret=x``, which both engine paths keep.
 """
 
 from __future__ import annotations
@@ -68,6 +67,16 @@ def sanitize_udf(s: pd.Series) -> pd.Series:
 # regex work; on match-heavy corpora it adds one linear scan.
 _GUARD_PATTERN = r"(?i)[0-9@]|bearer|secret|password|api"
 
+# ``\b`` with Java's ASCII-only ``\w``: Java 17's own ``\b`` treats any
+# Unicode letter as a word character, ``re.ASCII`` and RE2 do not.
+JAVA_ASCII_WB = r"(?:(?<=\w)(?!\w)|(?<!\w)(?=\w))"
+
+
+def java_regex(pat: str) -> str:
+    """A Python ``re.ASCII`` pattern as the Java regex that matches the same
+    strings (for these patterns): only ``\b`` needs rewriting."""
+    return pat.replace(r"\b", JAVA_ASCII_WB)
+
 
 def sanitize_guarded_expr(col: "str | F.Column") -> "F.Column":
     """``sanitize_sql_expr`` behind the necessity guard — bit-identical
@@ -85,5 +94,5 @@ def sanitize_sql_expr(col: "str | F.Column") -> "F.Column":
     for pat, repl in _PATTERNS:
         # Spark uses Java regex; (?i) inline flag and \1 backrefs are shared
         # with Python syntax for these patterns. Java wants $1, python \1.
-        c = F.regexp_replace(c, pat, repl.replace("\\1", "$1"))
+        c = F.regexp_replace(c, java_regex(pat), repl.replace("\\1", "$1"))
     return c

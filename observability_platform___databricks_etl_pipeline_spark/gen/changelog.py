@@ -220,8 +220,10 @@ def write_wal(df: DataFrame, wal_dir: str, chunk_size: int = 100_000) -> list[in
     — the engine's batch unit (reference analog: Kafka offset ranges,
     ``00_ingest_from_log_hub.py:415-420``). Returns the sorted chunk ids.
     """
-    # several files per chunk (like a real WAL segment dir / Kafka partition
-    # set) so a chunk scan parallelizes instead of being one unsplittable file
+    # files_per_chunk spreads each chunk over that many hash slots, but the
+    # repartition below names no partition count, so AQE coalesces the small
+    # shuffle partitions: a 5k-event chunk lands in 1-2 files and a 1M-event
+    # chunk in ~7, not 8+. A chunk's merge map stage runs one task per file.
     files_per_chunk = max(8, min(32, chunk_size // 50_000))
     (
         # null-seq (malformed) rows land in chunk 0 so they still reach the

@@ -61,6 +61,7 @@ from typing import Any
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 SPARK_TYPE = {
     "string": "string",
@@ -340,6 +341,65 @@ def _parquet_footer_stats(full: str, key0: str) -> tuple[int, int, Any, Any, dic
     except Exception:
         pass
     return rows, os.path.getsize(full), kmin, kmax, col_stats
+
+
+# Footer key under which Spark's parquet writer stores the row schema; Spark's
+# own schema inference reads this key first.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _first_data_file(path: str) -> str | None:
+    """``path`` itself, or the first parquet file under a directory (in
+    sorted order, skipping the names Spark's listing skips: ``.*``, and
+    ``_*`` unless it is a ``col=value`` partition dir such as ``__bucket=3``)."""
+    if not os.path.isdir(path):
+        return path
+    for dp, dns, fns in os.walk(path):
+        dns[:] = sorted(
+            d for d in dns if not (d.startswith(".") or (d.startswith("_") and "=" not in d))
+        )
+        for fn in sorted(fns):
+            if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
+                return os.path.join(dp, fn)
+    return None
+
+
+def read_parquet_pinned(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with the schema read on the driver from
+    the first file's footer (pyarrow, no data pages), so planning the read
+    submits no Spark job; without a schema Spark runs a 1-task inference job
+    on every read. The schema is the file's own, not the manifest's: files
+    committed by callers may differ physically (a decimal column the table
+    calls ``double``), and callers cast by column id after the read. A file
+    without Spark's row-metadata key, or a directory with no parquet file,
+    gets the inferring read."""
+    first = _first_data_file(paths[0])
+    reader = spark.read
+    if first is not None:
+        js = (pq.read_metadata(first).metadata or {}).get(_SPARK_ROW_METADATA)
+        if js is not None:
+            reader = reader.schema(StructType.fromJson(json.loads(js)))
+    return reader.parquet(*paths)
+
+
+def _q(name: str) -> str:
+    """Backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _cast_by_id(cur_cols: list[dict[str, Any]], old_cols: list[dict[str, Any]]) -> list[str]:
+    """SQL select list that re-maps columns written under ``old_cols`` onto
+    ``cur_cols`` by column id: a renamed column keeps its values, a column
+    added since reads as a typed null, every column is cast to its current
+    type (int→long promotion, or a physical type a caller wrote)."""
+    old_by_id = {c["id"]: c["name"] for c in old_cols}
+    sel = []
+    for c in cur_cols:
+        typ = SPARK_TYPE.get(c["type"], c["type"])
+        old = old_by_id.get(c["id"])
+        src = "NULL" if old is None else _q(old)
+        sel.append(f"CAST({src} AS {typ}) AS {_q(c['name'])}")
+    return sel
 
 
 def _atomic_write_json(path: str, obj: dict[str, Any]) -> None:
@@ -941,6 +1001,9 @@ class LakeVault:
         Rename promotion: files written under older schema versions are read
         with their original column names and re-mapped to current names by
         column id; columns added later are backfilled as typed nulls.
+        Planning submits no Spark job: each file group's read is pinned to
+        the schema in its first file's footer (``read_parquet_pinned``), and
+        the re-mapping is one ``selectExpr`` of SQL text per group.
 
         ``key_equals=(v0, v1, ...)`` is the FULLY-KEYED point probe: the
         driver computes the key's bucket itself (plans/sparkhash.py — a
@@ -979,16 +1042,10 @@ class LakeVault:
             column_ranges=column_ranges,
             column_equals=column_equals,
         )
-        if not files:
-            ddl = ", ".join(
-                f"`{c['name']}` {SPARK_TYPE.get(c['type'], c['type'])}" for c in cur.columns
-            )
-            return self.spark.createDataFrame([], schema=ddl)
-
         del_files = [f for f in files if f.get("eq_delete")]
         files = [f for f in files if not f.get("eq_delete")]
         if not files:
-            # every surviving file is an equality delete: no live rows
+            # nothing survived pruning, or only equality deletes: no live rows
             ddl = ", ".join(
                 f"`{c['name']}` {SPARK_TYPE.get(c['type'], c['type'])}" for c in cur.columns
             )
@@ -1009,20 +1066,10 @@ class LakeVault:
             by_group.setdefault(key, []).append(os.path.join(self.root, f["path"]))
         parts: list[DataFrame] = []
         for (sid, ordv), paths in sorted(by_group.items()):
-            old = snap.schemas[sid]
-            old_by_id = {c["id"]: c for c in old.columns}
-            df = self.spark.read.parquet(*paths)
-            sel = []
-            for c in cur.columns:
-                oc = old_by_id.get(c["id"])
-                typ = SPARK_TYPE.get(c["type"], c["type"])
-                if oc is None:
-                    sel.append(F.lit(None).cast(typ).alias(c["name"]))
-                else:
-                    sel.append(F.col(oc["name"]).cast(typ).alias(c["name"]))
+            sel = _cast_by_id(cur.columns, snap.schemas[sid].columns)
             if need_ord:
-                sel.append(F.lit(ordv).alias("__ord"))
-            parts.append(df.select(*sel))
+                sel.append(f"{ordv} AS __ord")
+            parts.append(read_parquet_pinned(self.spark, paths).selectExpr(*sel))
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -1076,7 +1123,7 @@ class LakeVault:
         is all they physically carry), names aligned by column id under
         each file's schema version."""
         keys = list(self.key_cols)
-        cur_cols = {c["name"]: c for c in snap.schema.columns}
+        key_cols = [c for c in snap.schema.columns if c["name"] in keys]
         by_group: dict[tuple[int, int], list[str]] = {}
         for f in del_files:
             by_group.setdefault((f["schema_id"], f["ord"]), []).append(
@@ -1084,17 +1131,9 @@ class LakeVault:
             )
         parts: list[DataFrame] = []
         for (sid, ordv), paths in sorted(by_group.items()):
-            old_by_id = {c["id"]: c for c in snap.schemas[sid].columns}
-            sel = [
-                F.col(old_by_id[cur_cols[k]["id"]]["name"])
-                .cast(SPARK_TYPE.get(cur_cols[k]["type"], cur_cols[k]["type"]))
-                .alias(k)
-                for k in keys
-            ]
+            sel = _cast_by_id(key_cols, snap.schemas[sid].columns)
             parts.append(
-                self.spark.read.parquet(*paths).select(
-                    *sel, F.lit(ordv).alias("__del_ord")
-                )
+                read_parquet_pinned(self.spark, paths).selectExpr(*sel, f"{ordv} AS __del_ord")
             )
         dels = parts[0]
         for p in parts[1:]:
@@ -1252,7 +1291,11 @@ class LakeVault:
         across schema evolution. If the table was re-bucketed between A and
         B the before side falls back to a full scan (pre-rebucket bucket
         ids are not comparable); the rewrite that re-bucketed it made every
-        bucket "affected" anyway."""
+        bucket "affected" anyway.
+
+        Like ``scan()``, planning submits no Spark job: both sides' reads
+        are footer-pinned, and the alignment, struct build and change
+        classification are SQL-text projections (``selectExpr``)."""
         snap_b = self.snapshot(to_snapshot_id)
         to_id = snap_b.snapshot_id
         if from_snapshot_id > to_id:
@@ -1291,37 +1334,28 @@ class LakeVault:
         # align the A side to B's schema BY COLUMN ID (the same rename-
         # promotion rule scan() applies to old-schema files): a column
         # renamed between A and B is the SAME column, a column added since
-        # A reads as a typed null at A
-        a_by_id = {c["id"]: c["name"] for c in snap_a.schema.columns}
-        sel = []
-        for c in snap_b.schema.columns:
-            typ = SPARK_TYPE.get(c["type"], c["type"])
-            old_name = a_by_id.get(c["id"])
-            if old_name is None:
-                sel.append(F.lit(None).cast(typ).alias(c["name"]))
-            else:
-                sel.append(F.col(old_name).cast(typ).alias(c["name"]))
-        before = before.select(*sel)
-
+        # A reads as a typed null at A. Each projection below is one
+        # selectExpr of SQL text, not a Column-API call chain per column.
         keys = list(self.key_cols)
-        non_key = [c for c in after.columns if c not in keys]
-        b_side = before.select(*keys, F.struct(*non_key).alias("_before"))
-        a_side = after.select(*keys, F.struct(*non_key).alias("__after"))
+        qkeys = [_q(k) for k in keys]
+        non_key = [_q(c["name"]) for c in snap_b.schema.columns if c["name"] not in keys]
+        b_side = before.selectExpr(
+            *_cast_by_id(snap_b.schema.columns, snap_a.schema.columns)
+        ).selectExpr(*qkeys, f"struct({', '.join(non_key)}) AS _before")
+        a_side = after.selectExpr(*qkeys, f"struct({', '.join(non_key)}) AS __after")
         j = b_side.join(a_side, keys, "full_outer")
+        # a NULL condition falls through to the next branch, so a key whose
+        # images are equal (<=>) gets no change type and is filtered out
         change = (
-            F.when(F.col("_before").isNull(), F.lit("insert"))
-            .when(F.col("__after").isNull(), F.lit("delete"))
-            .when(~F.col("_before").eqNullSafe(F.col("__after")), F.lit("update"))
+            "CASE WHEN _before IS NULL THEN 'insert' WHEN __after IS NULL THEN 'delete' "
+            "WHEN NOT (_before <=> __after) THEN 'update' END"
         )
-        img = F.when(F.col("__after").isNull(), F.col("_before")).otherwise(F.col("__after"))
+        img = "IF(__after IS NULL, _before, __after)"
         return (
-            j.withColumn("_change_type", change)
-            .where(F.col("_change_type").isNotNull())
-            .select(
-                *keys,
-                F.col("_change_type"),
-                *[img[c].alias(c) for c in non_key],
-                "_before",
+            j.selectExpr(*qkeys, f"{change} AS _change_type", "_before", "__after")
+            .where("_change_type IS NOT NULL")
+            .selectExpr(
+                *qkeys, "_change_type", *[f"({img}).{c} AS {c}" for c in non_key], "_before"
             )
         )
 

@@ -48,6 +48,7 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
+from functools import cached_property
 from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -59,6 +60,9 @@ from observability_platform___databricks_etl_pipeline_spark.plans.lakevault impo
     LakeVault,
     TableSchema,
     _atomic_write_json,
+    _cast_by_id,
+    _q,
+    read_parquet_pinned,
 )
 from observability_platform___databricks_etl_pipeline_spark.sources.wal import (
     N_WAL_PARTITIONS,
@@ -356,32 +360,32 @@ class CDCEngine:
         Columns: the table's columns (minus ``_before``) plus
         ``_change_type``."""
         ch = self.vault.scan_changes(from_snapshot_id, to_snapshot_id)
-        vt = F.col("_change_type")
-        before_del = F.col("_before")["is_deleted"]
-        after_del = F.col("is_deleted")  # pre-image here only when vt='delete'
+        # SQL text, one selectExpr: CASE takes the next branch on a NULL
+        # condition, as F.when does. is_deleted is the pre-image only when
+        # _change_type = 'delete'.
         logical = (
-            F.when((vt == "insert") & ~after_del, F.lit("insert"))
-            .when((vt == "update") & before_del & ~after_del, F.lit("insert"))
-            .when((vt == "update") & ~before_del & ~after_del, F.lit("update"))
-            .when((vt == "update") & ~before_del & after_del, F.lit("delete"))
-            .when((vt == "delete") & ~after_del, F.lit("delete"))
+            "CASE WHEN _change_type = 'insert' AND NOT is_deleted THEN 'insert' "
+            "WHEN _change_type = 'update' AND _before.is_deleted AND NOT is_deleted "
+            "THEN 'insert' "
+            "WHEN _change_type = 'update' AND NOT _before.is_deleted AND NOT is_deleted "
+            "THEN 'update' "
+            "WHEN _change_type = 'update' AND NOT _before.is_deleted AND is_deleted "
+            "THEN 'delete' "
+            "WHEN _change_type = 'delete' AND NOT is_deleted THEN 'delete' END"
         )
-        out_cols = [c for c in ch.columns if c not in ("_change_type", "_before")]
         # logical deletes surface the PRE-image (the last live row); every
         # other change surfaces the post-image scan_changes already built
-        use_before = (vt == "update") & ~before_del & after_del
+        use_before = "_change_type = 'update' AND NOT _before.is_deleted AND is_deleted"
+        keys = self.vault.key_cols
+        out_cols = [
+            _q(c) if c in keys else f"IF({use_before}, _before.{_q(c)}, {_q(c)}) AS {_q(c)}"
+            for c in ch.columns
+            if c not in ("_change_type", "_before")
+        ]
         return (
-            ch.withColumn("_logical", logical)
-            .where(F.col("_logical").isNotNull())
-            .select(
-                *[
-                    F.when(use_before, F.col("_before")[c]).otherwise(F.col(c)).alias(c)
-                    if c not in self.vault.key_cols
-                    else F.col(c)
-                    for c in out_cols
-                ],
-                F.col("_logical").alias("_change_type"),
-            )
+            ch.selectExpr("*", f"{logical} AS _logical")
+            .where("_logical IS NOT NULL")
+            .selectExpr(*out_cols, "_logical AS _change_type")
         )
 
     def tail(
@@ -571,6 +575,120 @@ class CDCEngine:
         base_ids = {i + 1 for i in range(len(BASE_COLUMNS))}
         return [c for c in schema.columns if c["id"] not in base_ids]
 
+    # ---- per-engine constant expressions -------------------------------------
+    # Every expression below depends only on column names, so it is built
+    # once per engine instead of once per batch: each Column-API call is a
+    # py4j round trip, and rebuilding these per batch cost ~0.36 s of driver
+    # time per 5k-event batch on a 4-core host.
+
+    @cached_property
+    def _malformed(self) -> F.Column:
+        """WAL rows missing an identity column: counted and quarantined."""
+        return (
+            F.col("seq").isNull()
+            | F.col("repo").isNull()
+            | F.col("path").isNull()
+            | F.col("commit").isNull()
+        )
+
+    @cached_property
+    def _is_data(self) -> F.Column:
+        """Well-formed data events (not schema-evolution events)."""
+        return ~self._malformed & (~F.col("op").isin(*SCHEMA_OPS) | F.col("op").isNull())
+
+    @cached_property
+    def _control_aggs(self) -> list[F.Column]:
+        """The control phase's observed aggregates that do not depend on the
+        snapshot: row and quarantine counts, per-WAL-partition high-water
+        marks."""
+        return [
+            F.count(F.lit(1)).alias("rows_read"),
+            F.sum(self._malformed.cast("long")).alias("quarantined"),
+        ] + [
+            F.max(F.when(wal_partition() == p, F.col("seq"))).alias(f"hwm_{p}")
+            for p in range(N_WAL_PARTITIONS)
+        ]
+
+    @cached_property
+    def _transform_cols(self) -> list[tuple[str, F.Column]]:
+        """The native transform as ordered ``withColumn`` steps (a step may
+        read the columns of the steps before it)."""
+        from observability_platform___databricks_etl_pipeline_spark.functions.classify import (
+            classify_op_expr,
+        )
+        from observability_platform___databricks_etl_pipeline_spark.functions.langinfer import (
+            infer_lang_expr,
+        )
+        from observability_platform___databricks_etl_pipeline_spark.functions.sanitize import (
+            sanitize_guarded_expr,
+        )
+
+        is_batch = F.col("__src") == 1
+        live_old = F.col("old_seq").isNotNull() & ~F.coalesce(F.col("old_deleted"), F.lit(False))
+        op = F.col("__op")
+        return [
+            ("__op", F.when(is_batch, classify_op_expr(F.col("op"), F.col("content")))),
+            (
+                "__san",
+                F.when(is_batch & (op != "delete"), sanitize_guarded_expr(F.col("content"))),
+            ),
+            (
+                "__lang_new",
+                F.when(
+                    is_batch & F.col("lang").isNull(),
+                    infer_lang_expr(F.col("path"), F.col("__san")),
+                ),
+            ),
+            ("content", F.when(is_batch, F.col("__san")).otherwise(F.col("content"))),
+            (
+                "content_sha256",
+                F.when(is_batch, content_sha256(F.col("__san"))).otherwise(
+                    F.col("content_sha256")
+                ),
+            ),
+            (
+                "lang",
+                F.when(is_batch, F.coalesce(F.col("lang"), F.col("__lang_new"))).otherwise(
+                    F.col("lang")
+                ),
+            ),
+            ("is_deleted", F.when(is_batch, op == "delete").otherwise(F.col("is_deleted"))),
+            (
+                "__action",
+                F.when(
+                    ~is_batch,
+                    F.when(F.col("new_seq").isNull(), F.lit("carry")).otherwise(F.lit("stale")),
+                )
+                .when(
+                    op == "delete",
+                    F.when(live_old, F.lit("delete")).otherwise(F.lit("delete_noop")),
+                )
+                .when(live_old, F.lit("update"))
+                .otherwise(F.lit("insert")),
+            ),
+        ]
+
+    @cached_property
+    def _write_aggs(self) -> list[F.Column]:
+        """Action counts and dedup accounting observed on the bucket write."""
+        act = F.col("__action")
+        return [
+            F.sum((act == "insert").cast("long")).alias("inserted"),
+            F.sum((act == "update").cast("long")).alias("updated"),
+            F.sum((act == "delete").cast("long")).alias("deleted"),
+            F.sum((act == "delete_noop").cast("long")).alias("delete_noop"),
+            F.sum((act == "stale").cast("long")).alias("stale"),
+            F.sum(F.when(F.col("n_events") > 0, F.col("n_events") - 1).otherwise(0)).alias(
+                "deduped"
+            ),
+            F.sum(
+                F.when(
+                    act.isin("insert", "update"),
+                    F.coalesce(F.length("content"), F.lit(0)).cast("long"),
+                ).otherwise(F.lit(0).cast("long"))
+            ).alias("logical_bytes"),
+        ]
+
     def _control_phase(self, wal_dir: str, chunk: int, bid: str) -> dict:
         """Table-state-independent half of a batch: chunk scan + observation
         (row counts, quarantine counts, offsets, affected buckets), schema
@@ -582,31 +700,18 @@ class CDCEngine:
         m = BatchMetrics(batch_id=bid, chunk=chunk)
         _t0 = time.perf_counter()
 
-        malformed = (
-            F.col("seq").isNull()
-            | F.col("repo").isNull()
-            | F.col("path").isNull()
-            | F.col("commit").isNull()
-        )
+        malformed = self._malformed
         # Row counts, malformed counts and per-WAL-partition offset
         # high-water marks ride the first action over the cached batch via
         # df.observe — no dedicated stats jobs (replaces the reference's
         # count()-after-every-stage storm, 02_enrich_events.py:76-362).
         obs_in = Observation()
         in_aggs = [
-            F.count(F.lit(1)).alias("rows_read"),
-            F.sum(malformed.cast("long")).alias("quarantined"),
             # affected COW buckets ride the same pass (collect_set is tiny:
-            # ≤ n_buckets longs) — no dedicated distinct job
-            F.collect_set(
-                F.when(
-                    ~malformed & (~F.col("op").isin(*SCHEMA_OPS) | F.col("op").isNull()),
-                    self.vault.bucket_expr(),
-                )
-            ).alias("buckets"),
-        ] + [
-            F.max(F.when(wal_partition() == p, F.col("seq"))).alias(f"hwm_{p}")
-            for p in range(N_WAL_PARTITIONS)
+            # ≤ n_buckets longs) — no dedicated distinct job. Built per batch:
+            # bucket_expr() follows the snapshot's n_buckets.
+            F.collect_set(F.when(self._is_data, self.vault.bucket_expr())).alias("buckets"),
+            *self._control_aggs,
         ]
         # No up-front repartition/cache: the merge aggregation below does its
         # own exchange, so repartitioning here would be a second full shuffle
@@ -641,7 +746,6 @@ class CDCEngine:
         return {
             "m": m,
             "raw": raw,
-            "malformed": malformed,
             "schema_rows": schema_rows,
             "offsets": offsets,
             "buckets": sorted(int(b) for b in (stats.get("buckets") or [])),
@@ -653,7 +757,7 @@ class CDCEngine:
         sequential across batches (each snapshot builds on its parent)."""
         m: BatchMetrics = ctrl["m"]
         raw = ctrl["raw"]
-        malformed = ctrl["malformed"]
+        malformed = self._malformed
 
         qfut = None
         if m.quarantined:
@@ -703,7 +807,6 @@ class CDCEngine:
         raw = ctrl["raw"]
         schema_rows = ctrl["schema_rows"]
         offsets = ctrl["offsets"]
-        malformed = ctrl["malformed"]
         _t0 = time.perf_counter()
 
         schema = self.vault.snapshot().schema
@@ -767,9 +870,7 @@ class CDCEngine:
                 m.schema_ops_invalid += 1
         extra_cols = self._extra_columns(schema)
 
-        data = raw.where(~malformed).where(
-            ~F.col("op").isin(*SCHEMA_OPS) | F.col("op").isNull()
-        )
+        data = raw.where(self._is_data)
 
         affected = ctrl["buckets"]
 
@@ -798,20 +899,10 @@ class CDCEngine:
         # COLUMN ID, not name — a column renamed this batch keeps its values
         # on carried rows (Iceberg-style rename promotion); only genuinely
         # new ids backfill as typed nulls.
-        from observability_platform___databricks_etl_pipeline_spark.plans.lakevault import SPARK_TYPE
-
-        existing = self.vault.scan(buckets=affected)
-        parent_by_id = {c["id"]: c["name"] for c in self.vault.snapshot().schema.columns}
+        ex = self.vault.scan(buckets=affected).selectExpr(
+            *_cast_by_id(schema.columns, self.vault.snapshot().schema.columns), "0 AS __src"
+        )
         cur_names = [c["name"] for c in schema.columns]
-        sel = []
-        for c in schema.columns:
-            typ = SPARK_TYPE.get(c["type"], c["type"])
-            pname = parent_by_id.get(c["id"])
-            if pname is not None and pname in existing.columns:
-                sel.append(F.col(pname).cast(typ).alias(c["name"]))
-            else:
-                sel.append(F.lit(None).cast(typ).alias(c["name"]))
-        ex = existing.select(*sel).withColumn("__src", F.lit(0))
         # r6 (guide §2.3, project before the exchange): the merge only ever
         # reads ``props`` to extract the evolved columns' keys, and the set of
         # evolved columns is known BEFORE the merge (schema events are
@@ -834,10 +925,7 @@ class CDCEngine:
         )
         both = ex.unionByName(b_in, allowMissingColumns=True)
         val_cols = [c for c in both.columns if c not in ("repo", "path")]
-        src = F.col("__src")
         merged = self._merge_maxby(both, val_cols)
-
-        live_old = F.col("old_seq").isNotNull() & ~F.coalesce(F.col("old_deleted"), F.lit(False))
 
         # Single-path finish: the fused transform (classify + sanitize +
         # lang-infer) runs as NATIVE whole-stage-codegen expressions — the
@@ -853,77 +941,14 @@ class CDCEngine:
         # the pandas kernels is pinned by tests/test_transform_native.py;
         # CDC_TRANSFORM=pandas selects the previous fused-UDF path (kept for
         # A/B and as the §2.10 vectorized-UDF surface).
-        is_batch = src == 1
+        # The native steps are built once per engine (_transform_cols).
+        is_batch = F.col("__src") == 1
         if os.environ.get("CDC_TRANSFORM", "native") == "pandas":
-            b = self._apply_transform_pandas(merged, is_batch, live_old)
+            b = self._apply_transform_pandas(merged, is_batch)
         else:
-            from observability_platform___databricks_etl_pipeline_spark.functions.classify import (
-                classify_op_expr,
-            )
-            from observability_platform___databricks_etl_pipeline_spark.functions.langinfer import (
-                infer_lang_expr,
-            )
-            from observability_platform___databricks_etl_pipeline_spark.functions.sanitize import (
-                sanitize_guarded_expr,
-            )
-
-            b = (
-                merged.withColumn(
-                    "__op",
-                    F.when(is_batch, classify_op_expr(F.col("op"), F.col("content"))),
-                )
-                .withColumn(
-                    "__san",
-                    F.when(
-                        is_batch & (F.col("__op") != "delete"),
-                        sanitize_guarded_expr(F.col("content")),
-                    ),
-                )
-                .withColumn(
-                    "__lang_new",
-                    F.when(
-                        is_batch & F.col("lang").isNull(),
-                        infer_lang_expr(F.col("path"), F.col("__san")),
-                    ),
-                )
-                .withColumn(
-                    "content",
-                    F.when(is_batch, F.col("__san")).otherwise(F.col("content")),
-                )
-                .withColumn(
-                    "content_sha256",
-                    F.when(is_batch, content_sha256(F.col("__san"))).otherwise(
-                        F.col("content_sha256")
-                    ),
-                )
-                .withColumn(
-                    "lang",
-                    F.when(
-                        is_batch, F.coalesce(F.col("lang"), F.col("__lang_new"))
-                    ).otherwise(F.col("lang")),
-                )
-                .withColumn(
-                    "is_deleted",
-                    F.when(is_batch, F.col("__op") == "delete").otherwise(
-                        F.col("is_deleted")
-                    ),
-                )
-                .withColumn(
-                    "__action",
-                    F.when(
-                        ~is_batch,
-                        F.when(F.col("new_seq").isNull(), F.lit("carry")).otherwise(
-                            F.lit("stale")
-                        ),
-                    )
-                    .when(
-                        F.col("__op") == "delete",
-                        F.when(live_old, F.lit("delete")).otherwise(F.lit("delete_noop")),
-                    )
-                    .when(live_old, F.lit("update"))
-                    .otherwise(F.lit("insert")),
-                )
-            )
+            b = merged
+            for name, col in self._transform_cols:
+                b = b.withColumn(name, col)
         for c in extra_cols:
             b = b.withColumn(
                 c["name"],
@@ -939,24 +964,7 @@ class CDCEngine:
         # job 3: the bucket write — action counts + dedup accounting ride it
         # via observe (one pass computes metrics AND writes files)
         obs_out = Observation()
-        act = F.col("__action")
-        out = out_meta.observe(
-            obs_out,
-            F.sum((act == "insert").cast("long")).alias("inserted"),
-            F.sum((act == "update").cast("long")).alias("updated"),
-            F.sum((act == "delete").cast("long")).alias("deleted"),
-            F.sum((act == "delete_noop").cast("long")).alias("delete_noop"),
-            F.sum((act == "stale").cast("long")).alias("stale"),
-            F.sum(F.when(F.col("n_events") > 0, F.col("n_events") - 1).otherwise(0)).alias(
-                "deduped"
-            ),
-            F.sum(
-                F.when(
-                    act.isin("insert", "update"),
-                    F.coalesce(F.length("content"), F.lit(0)).cast("long"),
-                ).otherwise(F.lit(0).cast("long"))
-            ).alias("logical_bytes"),
-        ).select(
+        out = out_meta.observe(obs_out, *self._write_aggs).select(
             *cur_names,
             "__action",
             F.length("content").alias("__content_len"),
@@ -1080,10 +1088,11 @@ class CDCEngine:
 
         return m
 
-    def _apply_transform_pandas(self, merged: DataFrame, is_batch, live_old) -> DataFrame:
+    def _apply_transform_pandas(self, merged: DataFrame, is_batch) -> DataFrame:
         """The pre-r6 fused pandas-UDF transform path (one Arrow round trip),
         selectable via CDC_TRANSFORM=pandas — kept as the vectorized-UDF
         surface and the A/B reference for the native-expression default."""
+        live_old = F.col("old_seq").isNotNull() & ~F.coalesce(F.col("old_deleted"), F.lit(False))
         return (
             merged.withColumn(
                 "__t", transform_udf(F.col("op"), F.col("path"), F.col("content"))
@@ -1198,17 +1207,20 @@ class CDCEngine:
     def _rollup_from_dir(self, data_dir: str, bid: str) -> None:
         """Build the per-batch rollup from a written bucket dir: prune to the
         slim metadata columns (__content_len stands in for the payload, so
-        the content column is never re-read), keep this batch's winners."""
+        the content column is never re-read), keep this batch's winners.
+        The read is footer-pinned; a dir whose files lack ``__action``
+        (written before it existed) raises at the projection."""
         winners = (
-            self.spark.read.parquet(data_dir)
-            .select("repo", "commit", "last_seq", "__action", "__content_len")
-            .where(F.col("__action").isin("insert", "update", "delete", "delete_noop"))
-            .withColumn(
-                "__op",
-                F.when(F.col("__action") == "delete_noop", F.lit("delete")).otherwise(
-                    F.col("__action")
-                ),
+            read_parquet_pinned(self.spark, [data_dir])
+            .selectExpr(
+                "repo",
+                "commit",
+                "last_seq",
+                "__action",
+                "__content_len",
+                "IF(__action = 'delete_noop', 'delete', __action) AS __op",
             )
+            .where("__action IN ('insert', 'update', 'delete', 'delete_noop')")
         )
         self._write_rollup(winners, bid)
 

@@ -252,3 +252,99 @@ def test_batch_ann_broadcasts_queries_not_corpus(spark, sf01_dir):
     plan = QUERIES["emb_lsh_topk_batch"](spark, sf01_dir)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan  # corpus is never shuffled for the join
+
+
+def test_read_planning_submits_no_spark_job(spark, tmp_path):
+    """Building ``current_state()``, ``lookup()``, ``changes()``, a
+    bucket-pruned ``scan()`` and the rollup's read of a partitioned write dir
+    submits no Spark job: every read of the table's files takes its schema
+    from a file footer instead of an inference job.
+    The table mixes four schema versions (int column ``n`` renamed to
+    ``hits``, promoted to long, then ``note`` added), a MOR delta, an
+    equality delete, and a caller-committed file whose ``score`` is decimal
+    on disk while the table calls it double."""
+    from observability_platform___databricks_etl_pipeline_spark.plans.lakevault import (
+        LakeVault,
+        read_parquet_pinned,
+    )
+    from observability_platform___databricks_etl_pipeline_spark.plans.replay import (
+        BASE_COLUMNS,
+        CDCEngine,
+    )
+    from observability_platform___databricks_etl_pipeline_spark.plans.sparkhash import bucket_of
+
+    root = str(tmp_path / "t")
+    v = LakeVault.create(
+        spark, root, [*BASE_COLUMNS, ("n", "int"), ("score", "double")],
+        key_cols=("repo", "path"), n_buckets=4,
+    )
+
+    def commit(p, extra, new_schema=None, delta=False, where="true"):
+        wd = v.new_write_dir(p)
+        df = spark.range(4).selectExpr(
+            "concat('r', id % 2) repo", f"concat('{p}', id) path", "'c' commit",
+            "'py' lang", f"concat('{p}x', id) content", f"concat('{p}h', id) content_sha256",
+            "id last_seq", "false is_deleted", *extra,
+        ).where(where)
+        (df.withColumn("__bucket", v.bucket_expr()).repartition(1)
+           .write.mode("overwrite").partitionBy("__bucket").parquet(wd))
+        return v.commit(add_write_dir=wd, replace_buckets=None, batch_id=p,
+                        manifest={"batch_id": p}, new_schema=new_schema, delta=delta)
+
+    # caller-committed: score is decimal(6,2) on disk, double in the schema
+    commit("a", ["cast(id as int) n", "cast(id as decimal(6,2)) score"])
+    s = v.snapshot().schema.rename_column("n", "hits")
+    commit("b", ["cast(id as int) hits", "cast(id as double) score"], new_schema=s)
+    s = s.promote_column("hits", "long")
+    commit("c", ["id hits", "cast(id as double) score"], new_schema=s)
+    s = s.add_column("note", "string")
+    since = commit("d", ["id hits", "cast(id as double) score", "concat('n', id) note"],
+                   new_schema=s)
+    # MOR delta: a1 updated, b2 tombstoned
+    wd = v.new_write_dir("e")
+    (spark.createDataFrame(
+        [("r1", "a1", "c", "py", "upd", "uh", 100, False, 41, 4.5, "new"),
+         ("r0", "b2", "c", "py", None, "dh", 100, True, 2, 2.0, None)],
+        "repo string, path string, commit string, lang string, content string, "
+        "content_sha256 string, last_seq long, is_deleted boolean, hits long, "
+        "score double, note string")
+     .withColumn("__bucket", v.bucket_expr()).repartition(1)
+     .write.mode("overwrite").partitionBy("__bucket").parquet(wd))
+    v.commit(add_write_dir=wd, replace_buckets=None, batch_id="e",
+             manifest={"batch_id": "e"}, delta=True)
+    v.delete("path = 'c3'", mode="mor")  # equality-delete file
+
+    def row(p, i, note=None):
+        return (f"r{i % 2}", f"{p}{i}", "c", "py", f"{p}x{i}", f"{p}h{i}", i, False,
+                i, float(i), note)
+
+    live = {row(p, i, f"n{i}" if p == "d" else None) for p in "abcd" for i in range(4)}
+    live -= {row("a", 1), row("b", 2), row("c", 3)}
+    live.add(("r1", "a1", "c", "py", "upd", "uh", 100, False, 41, 4.5, "new"))
+    buckets = sorted({bucket_of([r[0], r[1]], 4) for r in live})[:2]
+    tomb = ("r0", "b2", "c", "py", None, "dh", 100, True, 2, 2.0, None)
+
+    eng = CDCEngine(spark, root, n_buckets=4, with_rollup=False)
+    sc = spark.sparkContext._jsc.sc()
+    store = sc.statusStore()
+    sc.listenerBus().waitUntilEmpty()
+    jobs_before = store.jobsList(None).size()
+    state = eng.current_state()
+    look = eng.lookup("r1")
+    feed = eng.changes(since)
+    pruned = v.scan(buckets=buckets)
+    write_dir = read_parquet_pinned(spark, [wd])  # the rollup's read of a write dir
+    sc.listenerBus().waitUntilEmpty()
+    assert store.jobsList(None).size() == jobs_before
+
+    assert {tuple(r) for r in state.collect()} == live
+    assert {tuple(r) for r in look.collect()} == {r for r in live if r[0] == "r1"}
+    assert {tuple(r) for r in pruned.collect()} == {
+        r for r in live | {tomb} if bucket_of([r[0], r[1]], 4) in buckets
+    }
+    assert write_dir.columns[-3:] == ["score", "note", "__bucket"]
+    assert {(r["path"], r["_change_type"], r["content"]) for r in feed.collect()} == {
+        ("a1", "update", "upd"),
+        ("b2", "delete", "bx2"),
+        ("c3", "delete", "cx3"),
+    }

@@ -96,6 +96,10 @@ def test_edge_cases_equivalence(spark):
         ("i", "p.md", "\uff11\uff10.\uff10.\uff10.\uff17"),     # fullwidth IP
         ("i", "p.md", "bearer\u00a0abcdefgh1234"),  # NBSP is not \s
         ("i", "c.zzz", "def caf\u00e9(x):"),         # \w+ stops at the accent
+        # \b is an ASCII word boundary on every path (Java 17's is Unicode)
+        ("i", "p.md", "\u00e94111 1111 1111 1111"),  # card number after a letter
+        ("i", "p.md", "\u00e910.0.0.7"),             # IP after a letter
+        ("i", "c.zzz", "\u00e9def f(x):"),           # python rule after a letter
     ]
     df = spark.createDataFrame(rows, "op string, path string, content string")
     _compare(df)
