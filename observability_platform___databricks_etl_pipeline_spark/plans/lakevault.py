@@ -264,6 +264,28 @@ class Snapshot:
         return not self.manifest_refs and self._files_cache is not None and bool(self._files_cache)
 
 
+def changed_buckets(a: list[dict[str, Any]], b: list[dict[str, Any]]) -> set[int] | None:
+    """Buckets whose entries differ between two snapshots, given both sides'
+    manifest refs (O(refs), what the commit path diffs) or file entries
+    (what the read paths already hold). Entries are compared by path, which
+    is unique per commit attempt and immutable, so every bucket a commit in
+    between wrote, rewrote or emptied differs, and a ref-level answer is
+    never smaller than the file-level one. None when the bucket-less
+    entries differ: their keys could sit in any bucket, so the extent is
+    unbounded. Callers check a change of ``n_buckets`` themselves."""
+
+    def by_bucket(entries: list[dict[str, Any]]) -> dict[Any, set[str]]:
+        out: dict[Any, set[str]] = {}
+        for e in entries:
+            out.setdefault(e["bucket"], set()).add(e["path"])
+        return out
+
+    ba, bb = by_bucket(a), by_bucket(b)
+    if ba.pop(None, set()) != bb.pop(None, set()):
+        return None
+    return {k for k in set(ba) | set(bb) if ba.get(k, set()) != bb.get(k, set())}
+
+
 # Per-column stats: strings longer than this are not recorded (a truncated
 # max would need round-up semantics to stay a sound bound — skip instead;
 # pruning conservatively keeps the file). Key min/max have no cap: keys are
@@ -343,6 +365,26 @@ def _parquet_footer_stats(full: str, key0: str) -> tuple[int, int, Any, Any, dic
     return rows, os.path.getsize(full), kmin, kmax, col_stats
 
 
+def _manifest_entry(
+    root: str, full: str, bucket: int | None, schema_id: int, stats: tuple
+) -> dict[str, Any]:
+    """A manifest file entry from the file's ``_parquet_footer_stats``; the
+    commit adds the ``delta``/``eq_delete`` flags and the ordinal."""
+    rows, nbytes, kmin, kmax, cstats = stats
+    entry = {
+        "path": os.path.relpath(full, root),
+        "rows": rows,
+        "bytes": nbytes,
+        "bucket": bucket,
+        "schema_id": schema_id,
+        "min_key": kmin,
+        "max_key": kmax,
+    }
+    if cstats:
+        entry["col_stats"] = cstats
+    return entry
+
+
 # Footer key under which Spark's parquet writer stores the row schema; Spark's
 # own schema inference reads this key first.
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
@@ -385,6 +427,20 @@ def read_parquet_pinned(spark: SparkSession, paths: list[str]) -> DataFrame:
 def _q(name: str) -> str:
     """Backtick-quoted SQL identifier."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def snapshot_ddl(cols: list[dict[str, Any]]) -> str:
+    """DDL schema string of a snapshot's columns (``name type, ...``)."""
+    return ", ".join(f"{_q(c['name'])} {SPARK_TYPE.get(c['type'], c['type'])}" for c in cols)
+
+
+def lww_tie(columns: list[str]) -> list[str]:
+    """Merge-on-read tie order after the key: ``(last_seq, commit ordinal)``,
+    later commit wins at an equal ``last_seq``, matching the write-side rule
+    "batch beats table at equal seq" (``replay._merge_maxby``). Within one
+    commit a key appears at most once, so ``content_sha256`` is only a
+    deterministic tail, used when the table has it."""
+    return ["last_seq", "__ord"] + (["content_sha256"] if "content_sha256" in columns else [])
 
 
 def _cast_by_id(cur_cols: list[dict[str, Any]], old_cols: list[dict[str, Any]]) -> list[str]:
@@ -1010,46 +1066,26 @@ class LakeVault:
         bit-exact Python replica of the murmur3 ``bucket_expr``), so one
         bucket's manifests survive before key-range/stats/bloom pruning even
         run — O(1/n_buckets) of the metadata touched, no Spark job. Also
-        folds into ``key_range`` and (for the first key) ``column_equals``.
-        Skipped — never wrong — when legacy bucket-less files exist.
-        Callers still apply the row predicate (same superset contract)."""
+        folds into ``key_range`` (first key). The bucket step is skipped —
+        never wrong — when legacy bucket-less files exist. ``pruned_files``
+        owns the probe, so the ``lakevault`` data source's fully-keyed
+        filters prune the same way. Callers still apply the row predicate
+        (same superset contract)."""
         snap = self.snapshot(snapshot_id)
         cur = snap.schema
-        if key_equals is not None:
-            if len(key_equals) != len(self.key_cols) or any(v is None for v in key_equals):
-                raise ValueError(
-                    "key_equals must provide one non-null value per key column "
-                    f"{tuple(self.key_cols)} (got {key_equals!r})"
-                )
-            if key_range is None:
-                key_range = (key_equals[0], key_equals[0])
-            if buckets is None and not any(f.get("bucket") is None for f in snap.files):
-                from observability_platform___databricks_etl_pipeline_spark.plans.sparkhash import bucket_of
-
-                by_name = {c["name"]: c for c in cur.columns}
-                nb = snap.n_buckets if snap.n_buckets is not None else self.table_meta["n_buckets"]
-                buckets = [
-                    bucket_of(
-                        list(key_equals),
-                        nb,
-                        types=[by_name[k]["type"] for k in self.key_cols],
-                    )
-                ]
         files = self.pruned_files(
             snap,
             buckets=buckets,
             key_range=key_range,
             column_ranges=column_ranges,
             column_equals=column_equals,
+            key_equals=key_equals,
         )
         del_files = [f for f in files if f.get("eq_delete")]
         files = [f for f in files if not f.get("eq_delete")]
         if not files:
             # nothing survived pruning, or only equality deletes: no live rows
-            ddl = ", ".join(
-                f"`{c['name']}` {SPARK_TYPE.get(c['type'], c['type'])}" for c in cur.columns
-            )
-            return self.spark.createDataFrame([], schema=ddl)
+            return self.spark.createDataFrame([], schema=snapshot_ddl(cur.columns))
         need_merge = any(f.get("delta") for f in files)
         # the commit ordinal is needed for the MOR LWW tiebreak AND for
         # equality-delete application (a delete removes rows of SMALLER ord)
@@ -1087,28 +1123,16 @@ class LakeVault:
             # merge-on-read: delta files carry only each batch's winner rows
             # (incl. tombstones); the read view is LWW per key — one
             # partial-aggregated max_by, the same skew-immune shape as the
-            # write-side merge. CANONICAL ORDER: (last_seq, __ord) where
-            # __ord is the commit ordinal — on a duplicate seq spanning
-            # commits the LATER commit wins, exactly matching the write-side
-            # rule "batch beats table at equal seq" (max_by over
-            # (last_seq, __src, ...) in replay._merge_maxby), so MOR scans,
-            # COW materialization and compact() all converge on the same
-            # winner. Within one commit a key appears at most once (each
-            # delta file holds one merged winner per key), so the
-            # content_sha256 tail is a deterministic safety net only —
-            # included when the table has the column, omitted otherwise
-            # (LakeVault is a general table format; MOR must not require
-            # an engine-specific column).
+            # write-side merge, in the canonical ``lww_tie`` order, so MOR
+            # scans, COW materialization and compact() all converge on the
+            # same winner.
             # Pruning stays correct: base and delta rows of a key share the
             # same bucket and key-range span, so a pruned read is a pruned
             # superset merged the same way. COW tables (no delta entries)
             # never pay this aggregation.
             from observability_platform___databricks_etl_pipeline_spark.operators.dedup import lww_dedup
 
-            tie = ["last_seq", "__ord"]
-            if "content_sha256" in out.columns:
-                tie.append("content_sha256")
-            out = lww_dedup(out, list(self.key_cols), tie)
+            out = lww_dedup(out, list(self.key_cols), lww_tie(out.columns))
         if need_ord:
             out = out.drop("__ord")
         return out
@@ -1152,6 +1176,7 @@ class LakeVault:
         key_range: tuple[str | None, str | None] | None = None,
         column_ranges: dict[str, tuple[Any, Any]] | None = None,
         column_equals: dict[str, Any] | None = None,
+        key_equals: tuple[Any, ...] | None = None,
     ) -> list[dict[str, Any]]:
         """Manifest-metadata file pruning — the planning half of ``scan()``,
         shared with the ``lakevault`` Spark data source (sources/
@@ -1159,9 +1184,27 @@ class LakeVault:
         metadata (plus optional ranged bloom reads); never needs a
         SparkSession, so a metadata-only ``LakeVault(None, root)`` handle can
         call it. Superset guarantee as documented on ``scan()``: kept files
-        may contain non-matching rows, callers still apply row predicates."""
+        may contain non-matching rows, callers still apply row predicates.
+        ``key_equals`` is the fully-keyed probe documented on ``scan()``."""
         cur = snap.schema
         files = snap.files
+        if key_equals is not None:
+            if len(key_equals) != len(self.key_cols) or any(v is None for v in key_equals):
+                raise ValueError(
+                    "key_equals must provide one non-null value per key column "
+                    f"{tuple(self.key_cols)} (got {key_equals!r})"
+                )
+            if key_range is None:
+                key_range = (key_equals[0], key_equals[0])
+            # legacy bucket-less files: the probe cannot be bucket-scoped
+            if buckets is None and not any(f.get("bucket") is None for f in files):
+                from observability_platform___databricks_etl_pipeline_spark.plans.sparkhash import bucket_of
+
+                by_name = {c["name"]: c for c in cur.columns}
+                nb = snap.n_buckets if snap.n_buckets is not None else self.table_meta["n_buckets"]
+                buckets = [
+                    bucket_of(list(key_equals), nb, types=[by_name[k]["type"] for k in self.key_cols])
+                ]
         if column_equals:
             merged = dict(column_ranges or {})
             for col, v in column_equals.items():
@@ -1304,30 +1347,14 @@ class LakeVault:
                 f"than to_snapshot_id {to_id}"
             )
         snap_a = self.snapshot(from_snapshot_id)
-        # affected = buckets whose LIVE FILE SET differs between A and B.
-        # Any data change implies a file change (files are immutable), and
-        # this — unlike "buckets of post-A files" — also catches a bucket
-        # REPLACED WITH NOTHING (a pure-delete rewrite adds no file there).
-        # Pure manifest metadata, never lists the filesystem.
-        def per_bucket(snap: Snapshot) -> dict[Any, set]:
-            out: dict[Any, set] = {}
-            for f in snap.files:
-                out.setdefault(f["bucket"], set()).add(f["path"])
-            return out
-
-        pb_a, pb_b = per_bucket(snap_a), per_bucket(snap_b)
-        affected = sorted(
-            b
-            for b in set(pb_a) | set(pb_b)
-            if b is not None and pb_a.get(b, set()) != pb_b.get(b, set())
-        )
-        # bucket-less files (legacy manifests) poison the bucket set: fall
-        # back to a full diff rather than miss their keys
-        full_diff = pb_a.get(None, set()) != pb_b.get(None, set())
-        b_buckets = None if full_diff else affected
+        # affected = buckets whose live file set differs between A and B
+        # (this also catches a bucket REPLACED WITH NOTHING); None (legacy
+        # bucket-less files changed) means a full diff. Pure manifest
+        # metadata, never lists the filesystem.
+        affected = changed_buckets(snap_a.files, snap_b.files)
+        b_buckets = None if affected is None else sorted(affected)
         # a rebucket between A and B changes what bucket ids MEAN at A
-        rebucketed = snap_a.n_buckets != snap_b.n_buckets
-        a_buckets = None if (full_diff or rebucketed) else affected
+        a_buckets = None if snap_a.n_buckets != snap_b.n_buckets else b_buckets
 
         after = self.scan(to_id, buckets=b_buckets)
         before = self.scan(from_snapshot_id, buckets=a_buckets)
@@ -1398,18 +1425,7 @@ class LakeVault:
 
         entries: list[dict[str, Any]] = []
         for full, bucket in files:
-            rows, nbytes, kmin, kmax, cstats = stats[full]
-            entry = {
-                "path": os.path.relpath(full, self.root),
-                "rows": rows,
-                "bytes": nbytes,
-                "bucket": bucket,
-                "schema_id": schema_id,
-                "min_key": kmin,
-                "max_key": kmax,
-            }
-            if cstats:
-                entry["col_stats"] = cstats
+            entry = _manifest_entry(self.root, full, bucket, schema_id, stats[full])
             if delta:
                 entry["delta"] = True  # absent (not False) in COW entries: old snapshots stay readable
             if eq_delete:
@@ -1576,33 +1592,6 @@ class LakeVault:
             segs.append({"path": rel, "n": 1})
         return segs
 
-    def _changed_buckets(self, base: Snapshot, head: Snapshot) -> set[int] | None:
-        """Buckets whose manifest-ref set differs between two snapshots —
-        the write footprint of every commit in (base, head], computed from
-        ref metadata alone (same O(refs) diff ``scan_changes`` uses).
-        Returns None when bucket-less refs differ (extent unknown →
-        caller must treat every bucket as touched)."""
-
-        def by_bucket(s: Snapshot) -> tuple[dict[int, set[str]], set[str]]:
-            m: dict[int, set[str]] = {}
-            unbucketed: set[str] = set()
-            for r in s.manifest_refs:
-                if r["bucket"] is None:
-                    unbucketed.add(r["path"])
-                else:
-                    m.setdefault(r["bucket"], set()).add(r["path"])
-            return m, unbucketed
-
-        ma, ua = by_bucket(base)
-        mb, ub = by_bucket(head)
-        if ua != ub:
-            return None
-        return {
-            bk
-            for bk in set(ma) | set(mb)
-            if ma.get(bk, set()) != mb.get(bk, set())
-        }
-
     def _check_rebase(
         self,
         base: Snapshot,
@@ -1641,10 +1630,16 @@ class LakeVault:
             raise CommitConflict("concurrent re-bucketing")
         if delta or not replace_buckets:
             return
-        changed = self._changed_buckets(base, head)
+        # a legacy inline snapshot carries no refs to diff
+        changed = (
+            None
+            if base.is_legacy() or head.is_legacy()
+            else changed_buckets(base.manifest_refs, head.manifest_refs)
+        )
         if changed is None:
             raise CommitConflict(
-                "concurrent bucket-less writes — cannot prove disjointness"
+                "concurrent bucket-less writes or a legacy inline snapshot — "
+                "cannot prove disjointness"
             )
         overlap = set(replace_buckets) & changed
         if overlap:

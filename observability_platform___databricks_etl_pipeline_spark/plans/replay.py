@@ -6,9 +6,14 @@ one deterministic micro-batch loop with exactly-once semantics the reference
 lacks (its ``batch_id = datetime.now()`` + blind ``mode("append")`` duplicates
 data on rerun — ``01_ingest_raw_logs.py:178,213-218``).
 
-Per-batch plan — exactly TWO Spark jobs, ONE data shuffle:
+Per-batch plan — ONE data shuffle. A tail batch (a 5k-event chunk with
+malformed rows, rollup on) runs 6 Spark jobs, as the SQL status store lists
+them: the control collect (1), the quarantine write (1), the merge + bucket
+write (2 AQE stage jobs) and the rollup (2 AQE stage jobs). A batch with no
+malformed rows skips the quarantine job; ``with_rollup=False`` skips the
+rollup's.
 
-job 1 (control plane, narrow scan — no content column decoded):
+control plane (narrow scan — no content column decoded):
   - collect schema-evolution events (chunk-aligned barrier, seq order); the
     malformed-row trickle is counted here and written by a distributed
     quarantine job that overlaps the merge below (reference analog:
@@ -18,7 +23,7 @@ job 1 (control plane, narrow scan — no content column decoded):
     set (collect_set) — zero dedicated stats jobs, vs the reference's
     count()-after-every-stage storm (``02:76-362``)
 
-job 2 (data plane):
+data plane:
   - union: batch events ∪ existing rows of ONLY the affected buckets
     (manifest file pruning — no filesystem listing)
   - ONE aggregation: ``max_by(payload, (last_seq, src, content))`` per
@@ -55,7 +60,6 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from observability_platform___databricks_etl_pipeline_spark.functions.hashing import content_sha256
-from observability_platform___databricks_etl_pipeline_spark.functions.transform import transform_udf
 from observability_platform___databricks_etl_pipeline_spark.plans.lakevault import (
     LakeVault,
     TableSchema,
@@ -718,13 +722,13 @@ class CDCEngine:
         # of the batch, and caching a batch that is read ~2x from fast
         # columnar parquet wastes memory.
         raw = read_chunk(spark, wal_dir, chunk)
-        # narrow control-plane view: job 1 below needs only the key/identity
+        # narrow control-plane view: the control collect below needs only the key/identity
         # columns, op and props (schema events) — content (~80% of the
         # bytes), ts and lang are never decoded here (r6: ts/lang dropped
         # too; the quarantine write keeps them via its own projection)
         ctrl = raw.drop("content", "ts", "lang").observe(obs_in, *in_aggs)
 
-        # job 1 (tiny result; populates the observation): schema-evolution
+        # the control collect (tiny result; populates the observation): schema-evolution
         # events only — the malformed trickle stays distributed (collecting
         # it through py4j is serial, data-proportional work that caps scaling
         # at low core counts). Column pruning keeps this scan narrow.
@@ -938,17 +942,12 @@ class CDCEngine:
         # own column: CollapseProject keeps multiply-referenced non-cheap
         # aliases in separate projections, so sanitize runs ONCE per row even
         # though content and content_sha256 both read it. Equivalence with
-        # the pandas kernels is pinned by tests/test_transform_native.py;
-        # CDC_TRANSFORM=pandas selects the previous fused-UDF path (kept for
-        # A/B and as the §2.10 vectorized-UDF surface).
+        # the pandas kernels is pinned by tests/test_transform_native.py.
         # The native steps are built once per engine (_transform_cols).
         is_batch = F.col("__src") == 1
-        if os.environ.get("CDC_TRANSFORM", "native") == "pandas":
-            b = self._apply_transform_pandas(merged, is_batch)
-        else:
-            b = merged
-            for name, col in self._transform_cols:
-                b = b.withColumn(name, col)
+        b = merged
+        for name, col in self._transform_cols:
+            b = b.withColumn(name, col)
         for c in extra_cols:
             b = b.withColumn(
                 c["name"],
@@ -961,7 +960,7 @@ class CDCEngine:
         out_cols = [*cur_names, "__bucket", "__action", "n_events"]
         out_meta = out_meta.select(*out_cols)
 
-        # job 3: the bucket write — action counts + dedup accounting ride it
+        # the bucket write — action counts + dedup accounting ride it
         # via observe (one pass computes metrics AND writes files)
         obs_out = Observation()
         out = out_meta.observe(obs_out, *self._write_aggs).select(
@@ -978,21 +977,6 @@ class CDCEngine:
         # content-bearing merge frame (round-1 issue: rollup 2×'d the data
         # phase; a MEMORY_AND_DISK persist still paid a full columnar cache
         # build of the payload)
-        if os.environ.get("CDC_EXPLAIN_DIR"):
-            # instrumentation only (guide §7.2): dump the merge+transform
-            # plan that feeds the bucket write, one file per batch
-            try:
-                ed = os.environ["CDC_EXPLAIN_DIR"]
-                os.makedirs(ed, exist_ok=True)
-                plan = out._jdf.queryExecution().explainString(
-                    self.spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                        "formatted"
-                    )
-                )
-                with open(os.path.join(ed, f"merge-{bid[:8]}.txt"), "w") as f:
-                    f.write(plan)
-            except Exception:
-                pass
         wd = self.vault.new_write_dir(bid[:8])
         if self.write_mode == "mor":
             # merge-on-read: append ONLY this batch's winner rows (incl.
@@ -1087,50 +1071,6 @@ class CDCEngine:
                 _t0 = self._tick("auto_compact", _t0)
 
         return m
-
-    def _apply_transform_pandas(self, merged: DataFrame, is_batch) -> DataFrame:
-        """The pre-r6 fused pandas-UDF transform path (one Arrow round trip),
-        selectable via CDC_TRANSFORM=pandas — kept as the vectorized-UDF
-        surface and the A/B reference for the native-expression default."""
-        live_old = F.col("old_seq").isNotNull() & ~F.coalesce(F.col("old_deleted"), F.lit(False))
-        return (
-            merged.withColumn(
-                "__t", transform_udf(F.col("op"), F.col("path"), F.col("content"))
-            )
-            .withColumn("__op", F.when(is_batch, F.col("__t.op")))
-            .withColumn(
-                "content", F.when(is_batch, F.col("__t.content")).otherwise(F.col("content"))
-            )
-            .withColumn(
-                "content_sha256",
-                F.when(is_batch, content_sha256(F.col("__t.content"))).otherwise(
-                    F.col("content_sha256")
-                ),
-            )
-            .withColumn(
-                "lang",
-                F.when(is_batch, F.coalesce(F.col("lang"), F.col("__t.lang"))).otherwise(
-                    F.col("lang")
-                ),
-            )
-            .withColumn(
-                "is_deleted",
-                F.when(is_batch, F.col("__t.op") == "delete").otherwise(F.col("is_deleted")),
-            )
-            .withColumn(
-                "__action",
-                F.when(
-                    ~is_batch,
-                    F.when(F.col("new_seq").isNull(), F.lit("carry")).otherwise(F.lit("stale")),
-                )
-                .when(
-                    F.col("__t.op") == "delete",
-                    F.when(live_old, F.lit("delete")).otherwise(F.lit("delete_noop")),
-                )
-                .when(live_old, F.lit("update"))
-                .otherwise(F.lit("insert")),
-            )
-        )
 
     def _merge_maxby(self, both: DataFrame, val_cols: list[str]) -> DataFrame:
         """Default merge: ONE aggregation — max_by(payload, (last_seq, src,

@@ -6,10 +6,12 @@ LakeVault's physical layout keys every row to ``pmod(hash(key_cols), n)``
 the DRIVER compute the bucket of a literal key without a Spark job, which
 turns a fully-keyed point probe into a single-bucket manifest prune:
 
-- the ``lakevault`` data source maps ``EqualTo`` filters on ALL key columns
-  to ``buckets=[bucket_of(...)]`` (sources/lakevault_ds.py) — at 4096
-  buckets that alone drops 99.98% of files before any stats are consulted;
-- ``LakeVault.scan(key_equals=...)`` gets the same fast path natively.
+- ``LakeVault.pruned_files(key_equals=...)`` keeps only the key's bucket —
+  at 4096 buckets that alone drops 99.98% of files before any stats are
+  consulted. ``scan(key_equals=...)`` and the ``lakevault`` data source
+  (``EqualTo`` filters on ALL key columns) both go through it;
+- the data source's writer buckets rows by it when the input has no
+  ``__bucket`` column.
 
 Semantics replicated from Spark's hash expression (one value chained into
 the next as the seed; null leaves the seed unchanged):

@@ -44,6 +44,18 @@ see ``_LakeVaultWriterCore``)::
 
 Design notes (100 TB):
 
+- **Table rules are called, not copied.** Each rule the table owns lives
+  once in ``plans/lakevault.py`` and this module calls it:
+  file pruning and the fully-keyed probe's bucket (``pruned_files``), the
+  changed-bucket diff between two snapshots (``changed_buckets``), a
+  written file's manifest entry (``_manifest_entry`` over
+  ``_parquet_footer_stats``), the LWW tie order (``lww_tie``) and the
+  snapshot DDL (``snapshot_ddl``). What it must replicate is what runs in
+  Python workers, which cannot run Spark plans: column-id alignment
+  (``_read_aligned``), equality-delete application
+  (``_apply_eq_deletes_arrow``), the LWW fold (``_lww_fold``) and the
+  change diff (``_diff_rows``). tests/test_property_lakevault_ds.py holds
+  those four to ``scan()`` and ``scan_changes()`` on generated histories.
 - **Planning is manifest metadata only.** ``partitions()`` runs on the
   driver against the JSON snapshot/manifest layer (``LakeVault(None, root)``
   — no SparkSession needed) and reuses the exact pruning implementation
@@ -118,9 +130,13 @@ from pyspark.sql.datasource import (
 )
 
 from observability_platform___databricks_etl_pipeline_spark.plans.lakevault import (
-    SPARK_TYPE,
     LakeVault,
     Snapshot,
+    _manifest_entry,
+    _parquet_footer_stats,
+    changed_buckets,
+    lww_tie,
+    snapshot_ddl,
 )
 
 _ARROW_TYPE: dict[str, pa.DataType] = {
@@ -167,23 +183,18 @@ def _plain_cols(snap_schema) -> list[dict[str, Any]]:
     return [dict(c) for c in snap_schema.columns]
 
 
-def _snapshot_ddl(cols: list[dict[str, Any]]) -> str:
-    return ", ".join(f"`{c['name']}` {SPARK_TYPE.get(c['type'], c['type'])}" for c in cols)
-
-
 def _changes_ddl(cols: list[dict[str, Any]], key_cols: list[str]) -> str:
     """keys, _change_type, post/pre image of non-key columns, _before struct
     of the non-key columns — byte-compatible with ``LakeVault.scan_changes``."""
     by_name = {c["name"]: c for c in cols}
-    keys = [f"`{k}` {SPARK_TYPE.get(by_name[k]['type'], by_name[k]['type'])}" for k in key_cols]
-    non_key = [c for c in cols if c["name"] not in key_cols]
-    img = [f"`{c['name']}` {SPARK_TYPE.get(c['type'], c['type'])}" for c in non_key]
-    struct_fields = ", ".join(
-        f"`{c['name']}`: {SPARK_TYPE.get(c['type'], c['type'])}" for c in non_key
-    )
-    return ", ".join(
-        keys + [f"`{_CHANGE_TYPE_COL}` string"] + img + [f"`{_BEFORE_COL}` struct<{struct_fields}>"]
-    )
+    non_key = snapshot_ddl([c for c in cols if c["name"] not in key_cols])
+    parts = [
+        snapshot_ddl([by_name[k] for k in key_cols]),
+        f"`{_CHANGE_TYPE_COL}` string",
+        non_key,
+        f"`{_BEFORE_COL}` struct<{non_key}>",
+    ]
+    return ", ".join(p for p in parts if p)
 
 
 def _file_entry(f: dict[str, Any]) -> dict[str, Any]:
@@ -257,32 +268,6 @@ def _group_read_partitions(
     return parts
 
 
-def _affected_change_buckets(
-    snap_a: Snapshot, snap_b: Snapshot
-) -> tuple[list[Any], bool]:
-    """Buckets whose live FILE SET differs between two snapshots, plus a
-    full-diff flag (legacy bucket-less files or a rebucket in between make
-    per-bucket scoping unsound) — the same rule as ``scan_changes``."""
-
-    def per_bucket(snap: Snapshot) -> dict[Any, set]:
-        out: dict[Any, set] = {}
-        for f in snap.files:
-            out.setdefault(f["bucket"], set()).add(f["path"])
-        return out
-
-    pb_a, pb_b = per_bucket(snap_a), per_bucket(snap_b)
-    affected = sorted(
-        b
-        for b in set(pb_a) | set(pb_b)
-        if b is not None and pb_a.get(b, set()) != pb_b.get(b, set())
-    )
-    full = (
-        pb_a.get(None, set()) != pb_b.get(None, set())
-        or snap_a.n_buckets != snap_b.n_buckets
-    )
-    return affected, full
-
-
 # ---------------------------------------------------------------------------
 # executor-side readers (pyarrow; no SparkSession, no pyspark.sql.functions)
 # ---------------------------------------------------------------------------
@@ -352,10 +337,7 @@ def _read_aligned(
     if del_files:
         out = _apply_eq_deletes_arrow(out, root, del_files, schemas, cur_cols, key_cols)
     if need_merge:
-        tie = ["last_seq", "__ord"]
-        if "content_sha256" in out.column_names:
-            tie.append("content_sha256")
-        out = _lww_fold(out, key_cols, tie)
+        out = _lww_fold(out, key_cols, lww_tie(out.column_names))
     if need_ord:
         out = out.drop_columns(["__ord"])
     return out
@@ -571,7 +553,10 @@ def _plan_changes_partitions(
     v: LakeVault, from_sid: int, to_sid: int, cur_cols: list[dict[str, Any]]
 ) -> list[_ChangesPartition]:
     snap_a, snap_b = v.snapshot(from_sid), v.snapshot(to_sid)
-    affected, full = _affected_change_buckets(snap_a, snap_b)
+    # the planner holds both sides' file entries already, so it diffs those;
+    # a rebucket in between makes bucket ids incomparable
+    affected = changed_buckets(snap_a.files, snap_b.files)
+    full = affected is None or snap_a.n_buckets != snap_b.n_buckets
     key_cols = list(v.key_cols)
     # every referenced schema version from BOTH snapshots, so executors can
     # align either side; ids are table-global so one dict serves both
@@ -587,7 +572,7 @@ def _plan_changes_partitions(
             a_by.setdefault(f["bucket"], []).append(f)
         for f in snap_b.files:
             b_by.setdefault(f["bucket"], []).append(f)
-        units = [(a_by.get(b, []), b_by.get(b, [])) for b in affected]
+        units = [(a_by.get(b, []), b_by.get(b, [])) for b in sorted(affected)]
     return [
         _ChangesPartition(
             root=v.root,
@@ -644,31 +629,16 @@ class _SnapshotBatchReader(DataSourceReader):
             key_range = (equals[key0], equals[key0])
         elif key0 in ranges:
             key_range = ranges[key0]
-        # fully-keyed point probe: the driver computes the bucket itself
-        # (plans/sparkhash.py is bit-exact with bucket_expr) — one bucket's
-        # manifests survive before any stats are consulted
-        buckets = None
-        if all(k in equals and equals[k] is not None for k in v.key_cols) and not any(
-            f.get("bucket") is None for f in snap.files  # legacy files: unscopable
-        ):
-            from observability_platform___databricks_etl_pipeline_spark.plans.sparkhash import bucket_of
-
-            by_name = {c["name"]: c for c in cur_cols}
-            buckets = [
-                bucket_of(
-                    [equals[k] for k in v.key_cols],
-                    snap.n_buckets
-                    if snap.n_buckets is not None
-                    else v.table_meta["n_buckets"],
-                    types=[by_name[k]["type"] for k in v.key_cols],
-                )
-            ]
+        # fully-keyed point probe: pruned_files hashes the key to its bucket
+        key_equals = None
+        if all(equals.get(k) is not None for k in v.key_cols):
+            key_equals = tuple(equals[k] for k in v.key_cols)
         files = v.pruned_files(
             snap,
-            buckets=buckets,
             key_range=key_range,
             column_ranges=ranges or None,
             column_equals=equals or None,
+            key_equals=key_equals,
         )
         return _group_read_partitions(v.root, snap, files, cur_cols, list(v.key_cols))
 
@@ -750,12 +720,6 @@ class _ChangesStreamReader(DataSourceStreamReader):
 class _LakeVaultWriteMessage(WriterCommitMessage):
     def __init__(self, entries: list[dict[str, Any]]):
         self.entries = entries
-
-
-# string col stats longer than this are not recorded — mirrors the footer
-# harvester's soundness cap (lakevault._STAT_STR_MAX): a truncated max is
-# not an upper bound, and files without stats are conservatively kept
-_WRITE_STAT_STR_MAX = 64
 
 
 class _LakeVaultWriterCore:
@@ -877,34 +841,10 @@ class _LakeVaultWriterCore:
             part = t.filter(pa.array(buckets == b))
             full = os.path.join(self.write_dir, f"b{int(b)}-{_uuid.uuid4().hex}.parquet")
             pq.write_table(part, full)
-            # stats computed IN MEMORY at write time (Iceberg's rule: never
-            # re-open what you just wrote); col_stats mirror the footer
-            # harvester's soundness caps
-            col_stats: dict[str, list] = {}
-            for c in self.cur_cols:
-                col = part.column(c["name"])
-                if col.null_count == len(col):
-                    continue
-                mn, mx = pc.min(col).as_py(), pc.max(col).as_py()
-                if isinstance(mn, str) and (
-                    len(mn) > _WRITE_STAT_STR_MAX or len(mx) > _WRITE_STAT_STR_MAX
-                ):
-                    continue
-                if isinstance(mn, (str, int, float, bool)):
-                    col_stats[c["name"]] = [mn, mx]
-            k = part.column(key0)
-            entry = {
-                "path": os.path.relpath(full, self.root),
-                "rows": part.num_rows,
-                "bytes": os.path.getsize(full),
-                "bucket": int(b),
-                "schema_id": self.schema_id,
-                "min_key": pc.min(k).as_py(),
-                "max_key": pc.max(k).as_py(),
-            }
-            if col_stats:
-                entry["col_stats"] = col_stats
-            entries.append(entry)
+            # stats from the footer just written, by the same rule as every
+            # engine-written file (a ~KB read of a file this task made)
+            stats = _parquet_footer_stats(full, key0)
+            entries.append(_manifest_entry(self.root, full, int(b), self.schema_id, stats))
         return entries
 
     # -- driver side ---------------------------------------------------------
@@ -1028,7 +968,7 @@ class LakeVaultDataSource(DataSource):
         feed = self._feed()
         if feed == "snapshot":
             sid = _resolve_snapshot_id(v, self.options, "snapshotid")
-            return _snapshot_ddl(_plain_cols(v.snapshot(sid).schema))
+            return snapshot_ddl(_plain_cols(v.snapshot(sid).schema))
         if feed == "changes":
             sid = _resolve_snapshot_id(v, self.options, "tosnapshotid")
             snap = v.snapshot(sid)

@@ -19,8 +19,6 @@ EXPECTED = {
     "CDC_GATE_WAL_SUFFIX",  # pins the oracle gate's SQL text across processes
     "CDC_TIMING",  # per-batch phase timing print
     "CDC_WRITE_MODE",  # cow | mor default for CDCEngine
-    "CDC_TRANSFORM",  # native | pandas transform path (A/B reference)
-    "CDC_EXPLAIN_DIR",  # merge-plan captures
 }
 
 

@@ -146,3 +146,41 @@ def test_stream_write_exactly_once_across_restart(spark, tmp_path):
     run()
     assert _state(v)[("r5", "s1.py")] == (99, "py3")
     assert v.current_snapshot_id() > sid
+
+
+def test_timestamp_first_key_entry_is_the_footer_stats(spark, tmp_path):
+    """A table whose first key column is a timestamp: the writer builds its
+    manifest entry from the file footer, like every engine-written file, so
+    the commit stores no key stats for the datetime key instead of failing
+    to serialize it, and the entry equals ``_parquet_footer_stats``."""
+    import datetime
+    import os
+
+    from observability_platform___databricks_etl_pipeline_spark.plans.lakevault import (
+        _parquet_footer_stats,
+    )
+
+    v = LakeVault.create(
+        spark,
+        str(tmp_path / "ts"),
+        [("ts", "timestamp"), ("path", "string"), ("last_seq", "long")],
+        key_cols=("ts", "path"),
+        n_buckets=4,
+    )
+    lakevault_ds.register(spark)
+    ts = datetime.datetime(2024, 1, 1, 12, 30, 0)
+    spark.createDataFrame([(ts, "a.py", 1)], "ts timestamp, path string, last_seq long").write.format(
+        "lakevault"
+    ).mode("append").save(v.root)
+    (entry,) = v.snapshot().files
+    rows, nbytes, kmin, kmax, cstats = _parquet_footer_stats(
+        os.path.join(v.root, entry["path"]), "ts"
+    )
+    assert (entry["rows"], entry["bytes"], entry["min_key"], entry["max_key"]) == (
+        rows,
+        nbytes,
+        kmin,
+        kmax,
+    )
+    assert entry.get("col_stats", {}) == cstats
+    assert [tuple(r) for r in v.scan().collect()] == [(ts, "a.py", 1)]
