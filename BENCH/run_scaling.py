@@ -62,8 +62,7 @@ try:
     # chunk instead of spawning a 2-row batch that is pure overhead
     write_wal(generate_changelog(spark, n_events, n_repos=50, n_paths=500), wal,
               chunk_size=n_events // 4 + 2)
-    eng = CDCEngine(spark, f"{{base}}/tbl", n_buckets=32, with_rollup=False,
-                    write_mode={mode!r})
+    eng = CDCEngine(spark, f"{{base}}/tbl", n_buckets=32, write_mode={mode!r})
     t0 = time.perf_counter()
     res = eng.replay(wal)
     el = time.perf_counter() - t0

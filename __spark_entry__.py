@@ -56,7 +56,7 @@ def entry(spark: SparkSession) -> DataFrame:
         from observability_platform___databricks_etl_pipeline_spark.gen.changelog import write_wal
 
         write_wal(wal_df, wal, chunk_size=250)
-        eng = CDCEngine(spark, f"{base}/tbl", n_buckets=8, with_rollup=False)
+        eng = CDCEngine(spark, f"{base}/tbl", n_buckets=8)
         eng.replay(wal)
         out = (
             eng.current_state()

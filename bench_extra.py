@@ -5,7 +5,7 @@ Not part of the frozen driver contract (bench.py is untouched). Modes:
 
   python bench_extra.py plans [out_dir]      # .explain('formatted') per headline query
   python bench_extra.py time  [names...]     # median-of-3 noop-sink timing per query
-  python bench_extra.py replay [n_events]    # one replay with CDC_TIMING=1 phases
+  python bench_extra.py replay [n_events]    # replay phases + ingest_metrics() catch-up
   python bench_extra.py reads  [rounds]      # plan/exec p50 + plan-time jobs per read
 
 $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS as in bench.py.
@@ -65,6 +65,13 @@ def _materialize(df):
     df.write.format("noop").mode("overwrite").save()
 
 
+def _n_jobs(spark) -> int:
+    """Spark jobs submitted so far, from the status store."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    return jsc.statusStore().jobsList(None).size()
+
+
 def _warmup(spark):
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     from observability_platform___databricks_etl_pipeline_spark.functions.sanitize import sanitize_udf
@@ -116,8 +123,11 @@ def cmd_time(names: list[str], trials: int = 3) -> None:
 
 def cmd_replay(n_events: int) -> None:
     """Replay a persistent WAL (generated once, reused across invocations so
-    A/B variants compare against identical input). BX_WAL_BASE overrides the
-    base dir; the WAL is only regenerated when missing."""
+    A/B variants compare against identical input), then time the
+    ``ingest_metrics()`` catch-up that builds the replay's rollups (wall
+    seconds and Spark jobs; its time also lands in the ``rollup_build``
+    phase). BX_WAL_BASE overrides the base dir; the WAL is only regenerated
+    when missing."""
     import shutil
 
     os.environ["CDC_TIMING"] = "1"
@@ -140,10 +150,14 @@ def cmd_replay(n_events: int) -> None:
     for t in range(trials):
         tbl = f"{base}/tbl{t}"
         shutil.rmtree(tbl, ignore_errors=True)
-        eng = CDCEngine(spark, tbl, n_buckets=32, with_rollup=True)
+        eng = CDCEngine(spark, tbl, n_buckets=32)
         t0 = time.perf_counter()
         eng.replay(wal)
         dt = time.perf_counter() - t0
+        j0 = _n_jobs(spark)
+        t0 = time.perf_counter()
+        eng.ingest_metrics()
+        rollup_s = time.perf_counter() - t0
         print(
             json.dumps(
                 {
@@ -151,6 +165,8 @@ def cmd_replay(n_events: int) -> None:
                     "replay_sec": round(dt, 3),
                     "events_per_sec": round(n_events / dt, 1),
                     "phases": {k: round(v, 3) for k, v in eng.phase_seconds.items()},
+                    "rollup_catchup_sec": round(rollup_s, 3),
+                    "rollup_catchup_jobs": _n_jobs(spark) - j0,
                 }
             )
         )
@@ -194,21 +210,14 @@ def cmd_reads(rounds: int = 6) -> None:
             "changes": lambda: eng.changes(head - 1),
             "ds_scan": lambda: spark.read.format("lakevault").load(tbl),
         }
-        jsc = spark.sparkContext._jsc.sc()
-        store = jsc.statusStore()
-
-        def n_jobs() -> int:
-            jsc.listenerBus().waitUntilEmpty()
-            return store.jobsList(None).size()
-
         per = {k: {"plan": [], "exec": [], "plan_jobs": 0} for k in kinds}
         for r in range(rounds + 1):  # round 0 warms every kind up
             for kind, build in kinds.items():
-                j0 = n_jobs()
+                j0 = _n_jobs(spark)
                 t0 = time.perf_counter()
                 df = build()
                 plan_s = time.perf_counter() - t0
-                j1 = n_jobs()
+                j1 = _n_jobs(spark)
                 t0 = time.perf_counter()
                 _materialize(df)
                 exec_s = time.perf_counter() - t0

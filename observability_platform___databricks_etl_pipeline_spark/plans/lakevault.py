@@ -318,11 +318,23 @@ def _parquet_footer_stats(full: str, key0: str) -> tuple[int, int, Any, Any, dic
     EVERY row group carries min/max stats (a statless row group could hold
     anything, so a partial bound is not a bound). Shared by the driver-side
     and distributed harvest paths (must stay module-level: the executor path
-    pickles it into a mapInPandas closure)."""
+    pickles it into a mapInPandas closure).
+
+    NaN rule (the only one): Spark sorts NaN above every value, so a float
+    span bounds its rows only if the footer rules NaN out. Spark's writer
+    (parquet-mr) records NaN as the max; pyarrow skips NaN in min/max. A
+    float span that may hide a NaN gets no stats, so pruning keeps the file."""
     md = pq.ParquetFile(full).metadata
     rows = md.num_rows
     kmin = kmax = None
     col_stats: dict[str, list] = {}
+    nan_in_max = (md.created_by or "").startswith("parquet-mr")
+
+    def span(mins: list, maxs: list) -> tuple[Any, Any]:
+        if isinstance(maxs[0], float) and not (nan_in_max and all(v == v for v in maxs)):
+            return None, None
+        return min(mins), max(maxs)
+
     try:
         names = [md.schema.column(i).name for i in range(md.num_columns)]
         if key0 in names:
@@ -334,7 +346,7 @@ def _parquet_footer_stats(full: str, key0: str) -> tuple[int, int, Any, Any, dic
                     mins.append(st.min)
                     maxs.append(st.max)
             if mins:
-                kmin, kmax = min(mins), max(maxs)
+                kmin, kmax = span(mins, maxs)
                 if isinstance(kmin, bytes):
                     kmin = kmin.decode("utf-8", "replace")
                     kmax = kmax.decode("utf-8", "replace")
@@ -357,7 +369,7 @@ def _parquet_footer_stats(full: str, key0: str) -> tuple[int, int, Any, Any, dic
                 maxs.append(st.max)
             if not mins:
                 continue
-            lo, hi = _stat_val(min(mins)), _stat_val(max(maxs))
+            lo, hi = (_stat_val(v) for v in span(mins, maxs))
             if lo is not None and hi is not None:
                 col_stats[name] = [lo, hi]
     except Exception:

@@ -7,11 +7,14 @@ lacks (its ``batch_id = datetime.now()`` + blind ``mode("append")`` duplicates
 data on rerun — ``01_ingest_raw_logs.py:178,213-218``).
 
 Per-batch plan — ONE data shuffle. A tail batch (a 5k-event chunk with
-malformed rows, rollup on) runs 6 Spark jobs, as the SQL status store lists
-them: the control collect (1), the quarantine write (1), the merge + bucket
-write (2 AQE stage jobs) and the rollup (2 AQE stage jobs). A batch with no
-malformed rows skips the quarantine job; ``with_rollup=False`` skips the
-rollup's.
+malformed rows) runs 4 Spark jobs, as the SQL status store lists them: the
+control collect (1), the quarantine write (1) and the merge + bucket write
+(2 AQE stage jobs). A batch with no malformed rows runs 3.
+
+The per-batch ingest rollup is derived data, not part of the commit: it is
+built on read. ``ingest_metrics()`` and ``expire()`` (before it deletes any
+data file) build every committed batch's missing rollup from the write dir
+its manifest names, all pending batches in one Spark write.
 
 control plane (narrow scan — no content column decoded):
   - collect schema-evolution events (chunk-aligned barrier, seq order); the
@@ -53,7 +56,7 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
-from functools import cached_property
+from functools import cached_property, reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -65,6 +68,7 @@ from observability_platform___databricks_etl_pipeline_spark.plans.lakevault impo
     TableSchema,
     _atomic_write_json,
     _cast_by_id,
+    _first_data_file,
     _q,
     read_parquet_pinned,
 )
@@ -165,7 +169,7 @@ class CDCEngine:
         spark: SparkSession,
         table_root: str,
         n_buckets: int = 16,
-        with_rollup: bool = True,
+        with_rollup: bool = True,  # ignored, still accepted: the rollup is built on read
         write_mode: str | None = None,
         mor_compact_threshold: int = 8,
         branch: str | None = None,
@@ -173,7 +177,6 @@ class CDCEngine:
     ):
         self.spark = spark
         self.root = table_root
-        self.with_rollup = with_rollup
         # Write-audit-publish: an engine constructed with branch="x" replays
         # into that branch's snapshot namespace — main readers see nothing
         # until LakeVault.publish_branch("x") fast-forwards main (see
@@ -232,10 +235,6 @@ class CDCEngine:
         # headline (r3 verdict #1: a 2.3x phantom regression shipped because
         # the replay metric was the one single-trial, unattributed number).
         self.phase_seconds: dict[str, float] = {}
-        # set by replay(): rollup jobs overlap the next batch on this pool;
-        # None (e.g. streaming _apply_chunk) → rollup runs inline
-        self._rollup_pool = None
-        self._rollup_futs: list = []
 
     # ---- public API --------------------------------------------------------
 
@@ -272,22 +271,6 @@ class CDCEngine:
         # strictly sequential; a crash cancels nothing that matters (the
         # prefetched control work is idempotent side-effect-wise).
         pool = ThreadPoolExecutor(max_workers=1)
-        # Rollup jobs run on their own thread: the rollup is derived data
-        # over IMMUTABLE just-written bucket files, so it overlaps the next
-        # batch's control/merge instead of extending the critical path.
-        # A crash can leave a committed batch without its rollup — resume
-        # backfills it idempotently below (metrics are eventually-consistent
-        # derived data, never part of the exactly-once commit).
-        rpool = ThreadPoolExecutor(max_workers=1)
-        self._rollup_pool = rpool
-        rollup_futs: list = []
-        self._rollup_futs = rollup_futs
-        if self.with_rollup:
-            for b in result.batches:  # committed-batch backfill (crash hole)
-                if b.skipped and not os.path.isdir(
-                    os.path.join(self.metrics_dir, f"batch_id={b.batch_id}")
-                ):
-                    rollup_futs.append(rpool.submit(self._rollup_backfill, b.batch_id))
         try:
             fut = None
             for i, chunk in enumerate(todo):
@@ -305,12 +288,8 @@ class CDCEngine:
                 self._write_checkpoint(wal_dir, chunks)
                 if fail_after_batches is not None and i + 1 >= fail_after_batches:
                     raise RuntimeError(f"simulated crash after {i + 1} batches")
-            for rf in rollup_futs:
-                rf.result()  # surface real rollup failures
         finally:
             pool.shutdown(wait=False, cancel_futures=True)
-            rpool.shutdown(wait=True)  # never leave a rollup mid-write
-            self._rollup_pool = None
         result.snapshot_id = self.vault.current_snapshot_id()
         self._write_checkpoint(wal_dir, chunks)
         return result
@@ -454,10 +433,16 @@ class CDCEngine:
                 time.sleep(poll_interval_s)
 
     def ingest_metrics(self) -> DataFrame:
-        """Per-batch per-repo rollup table (Gold analog; empty if rollup off)."""
-        if not os.path.isdir(self.metrics_dir):
+        """Per-batch per-repo rollup table (Gold analog).
+
+        The rollup is built on read: this call first builds every committed
+        batch's missing rollup (``_build_rollups``), so it may run Spark
+        jobs — one write for all pending batches — and raises if that build
+        fails."""
+        self._build_rollups()
+        if not os.path.isdir(self.metrics_dir) or _first_data_file(self.metrics_dir) is None:
             return self.spark.createDataFrame([], "repo string, events long, batch_id string")
-        return self.spark.read.parquet(self.metrics_dir)
+        return read_parquet_pinned(self.spark, [self.metrics_dir])
 
     def quarantine(self) -> DataFrame:
         """Dead-letter rows (malformed events) across all batches."""
@@ -487,10 +472,17 @@ class CDCEngine:
           are never dropped (the exactly-once skip set is tiny and must be
           complete forever); only their per-batch side DATA is retention-
           bounded — without this, the side dirs grow one subdir per batch
-          for the life of the table."""
+          for the life of the table.
+
+        Before it deletes any data file, it builds the pending rollups of
+        the batches it keeps (``_build_rollups``): a rollup is derived from
+        its batch's write dir, which the snapshot sweep may delete. A build
+        failure raises before anything is deleted."""
         import shutil
 
-        removed = self.vault.expire_snapshots(keep_last=keep_last)
+        if self.branch is not None:
+            # before any tombstone or build: expire_snapshots refuses branches
+            raise ValueError("expire() runs on a main-table engine, not a branch's")
         batches = self.vault.snapshot().committed_batches  # commit order
         keep = set(batches[-keep_side_batches:]) if keep_side_batches > 0 else set(batches)
         # batches staged on LIVE branches are committed state too (their
@@ -505,6 +497,13 @@ class CDCEngine:
         staged -= set(batches)
         keep |= staged
         expired_bids = [b for b in batches if b not in keep]
+        # tombstone the batch ids this pass sweeps BEFORE building: the
+        # builder skips them (their rollups would be swept below), and a
+        # later build never regrows a side dir this pass bounded
+        if expired_bids:
+            self._tombstone(expired_bids)
+        self._build_rollups()
+        removed = self.vault.expire_snapshots(keep_last=keep_last)
         for d in (self.quarantine_dir, self.metrics_dir):
             if not os.path.isdir(d):
                 continue
@@ -529,15 +528,6 @@ class CDCEngine:
                     except OSError:
                         continue
                 os.remove(full)
-        # tombstone the swept batch ids: replay()'s skipped-batch rollup
-        # BACKFILL would otherwise find the still-live write dirs and regrow
-        # every side dir this retention pass just bounded
-        if expired_bids:
-            prior = self._expired_side_batches()
-            _atomic_write_json(
-                self._side_retention_path(),
-                {"expired": sorted(prior | set(expired_bids))},
-            )
         return removed
 
     @staticmethod
@@ -886,7 +876,7 @@ class CDCEngine:
                 add_write_dir=None,
                 replace_buckets=[],
                 batch_id=bid,
-                manifest=self._manifest(bid, wal_dir, chunk, offsets, m),
+                manifest=self._manifest(bid, wal_dir, chunk, offsets, m, None),
                 new_schema=new_schema,
                 summary={"operation": "merge", "chunk": chunk},
             )
@@ -971,12 +961,8 @@ class CDCEngine:
         )
         # __action/__content_len are written into the bucket files: they
         # cost ~nothing (RLE-dictionary string + int), scan() projects by
-        # schema so readers never see them, and they let the rollup run
-        # post-write over the files already on tmpfs/disk with the content
-        # column PRUNED from the re-read — instead of persisting the
-        # content-bearing merge frame (round-1 issue: rollup 2×'d the data
-        # phase; a MEMORY_AND_DISK persist still paid a full columnar cache
-        # build of the payload)
+        # schema so readers never see them, and ``_build_rollups`` reads
+        # them from this write dir with the content column pruned
         wd = self.vault.new_write_dir(bid[:8])
         if self.write_mode == "mor":
             # merge-on-read: append ONLY this batch's winner rows (incl.
@@ -1013,19 +999,6 @@ class CDCEngine:
             qfut.result()  # must land before the commit (crash contract)
         _t0 = self._tick("merge_transform_write", _t0)
 
-        if self.with_rollup:
-            # rollup over the files this batch just wrote (already on disk —
-            # the scale-safe second pass: a content-pruned parquet re-read of
-            # immutable files, not a merge re-run and not a cache of the full
-            # payload). Off the critical path when replay() provides a pool.
-            if self._rollup_pool is not None:
-                self._rollup_futs.append(
-                    self._rollup_pool.submit(self._rollup_from_dir, wd, bid)
-                )
-            else:
-                self._rollup_from_dir(wd, bid)
-            _t0 = self._tick("rollup_submit", _t0)
-
         new_schema = schema if schema.schema_id != self.vault.snapshot().schema.schema_id else None
         self.vault.commit(
             add_write_dir=wd,
@@ -1033,7 +1006,7 @@ class CDCEngine:
             # affected buckets for their rewritten versions
             replace_buckets=[] if self.write_mode == "mor" else affected,
             batch_id=bid,
-            manifest=self._manifest(bid, wal_dir, chunk, offsets, m),
+            manifest=self._manifest(bid, wal_dir, chunk, offsets, m, wd),
             new_schema=new_schema,
             summary={"operation": "merge", "chunk": chunk},
             delta=self.write_mode == "mor",
@@ -1135,57 +1108,16 @@ class CDCEngine:
         return self._data_phase(wal_dir, chunk, bid, ctrl)
 
     def _manifest(
-        self, bid: str, wal_dir: str, chunk: int, offsets: dict[str, int], m: BatchMetrics
+        self, bid: str, wal_dir: str, chunk: int, offsets: dict, m: BatchMetrics, wd: str | None
     ) -> dict[str, Any]:
         return {
             "batch_id": bid,
             "offsets": offsets,
             "metrics": m.to_json(),
             "lineage": [f"{os.path.abspath(wal_dir)}/chunk={chunk}"],
+            # table-relative write dir, the rollup's source (None: no files)
+            "write_dir": os.path.relpath(wd, self.root) if wd else None,
         }
-
-    def _rollup_from_dir(self, data_dir: str, bid: str) -> None:
-        """Build the per-batch rollup from a written bucket dir: prune to the
-        slim metadata columns (__content_len stands in for the payload, so
-        the content column is never re-read), keep this batch's winners.
-        The read is footer-pinned; a dir whose files lack ``__action``
-        (written before it existed) raises at the projection."""
-        winners = (
-            read_parquet_pinned(self.spark, [data_dir])
-            .selectExpr(
-                "repo",
-                "commit",
-                "last_seq",
-                "__action",
-                "__content_len",
-                "IF(__action = 'delete_noop', 'delete', __action) AS __op",
-            )
-            .where("__action IN ('insert', 'update', 'delete', 'delete_noop')")
-        )
-        self._write_rollup(winners, bid)
-
-    def _rollup_backfill(self, bid: str) -> None:
-        """Recompute a committed batch's missing rollup (crash landed between
-        commit and the async rollup write). The batch's immutable write dir
-        is discoverable by its bid tag; files written before __action/
-        __content_len existed (or already compacted away) are skipped — the
-        rollup is best-effort derived data, never replay state. Batches
-        whose side data was REMOVED by ``expire()`` are recorded in a
-        tombstone file and never resurrected. A crashed earlier attempt can
-        leave a second dir with the same bid tag holding only write-task
-        garbage, so every match is tried newest-first rather than trusting
-        glob order."""
-        import glob as _glob
-
-        if bid in self._expired_side_batches():
-            return
-        dirs = _glob.glob(os.path.join(self.vault.data_dir, f"w-*-{bid[:8]}-*"))
-        for d in sorted(dirs, key=os.path.getmtime, reverse=True):
-            try:
-                self._rollup_from_dir(d, bid)
-                return
-            except Exception:
-                continue
 
     def _side_retention_path(self) -> str:
         return os.path.join(self.vault.vault_dir, "side_retention.json")
@@ -1197,13 +1129,66 @@ class CDCEngine:
         with open(p) as f:
             return set(json.load(f).get("expired", []))
 
-    def _write_rollup(self, winners, bid: str) -> None:
-        """Per-batch per-repo ingest rollup — the Gold-layer analog
-        (``03_build_flow_dataset.py:66-114``): counts, op mix, byte volume,
-        content-length percentiles, seq range, sample commits."""
+    def _tombstone(self, bids: list[str]) -> None:
+        """Record batch ids whose side data is gone; no build regrows it."""
+        _atomic_write_json(
+            self._side_retention_path(),
+            {"expired": sorted(self._expired_side_batches() | set(bids))},
+        )
+
+    def _build_rollups(self) -> None:
+        """Build every pending per-batch per-repo ingest rollup in ONE Spark
+        write — the Gold-layer analog (``03_build_flow_dataset.py:66-114``):
+        counts, op mix, byte volume, content-length percentiles, seq range,
+        sample commits.
+
+        A committed batch is pending when it has no ``batch_id=<bid>`` dir
+        under ``metrics_dir`` and no tombstone. Its winners come from a
+        footer-pinned, content-pruned read of the write dir its manifest
+        names; dynamic partition overwrite rewrites only the pending dirs. A
+        failure raises: once ``expire()`` sweeps a write dir, its rollup
+        cannot be rebuilt. Each pending batch leaves with a dir or a
+        tombstone, so the next call reads no manifest for it: an empty dir
+        when it has no winner rows, a tombstone when its write dir holds no
+        parquet (``expire()`` builds before it sweeps, so only a rollup dir
+        lost after the sweep gets there; no retry could rebuild it)."""
+        built = set(os.listdir(self.metrics_dir)) if os.path.isdir(self.metrics_dir) else set()
+        expired = self._expired_side_batches()
+        reads, lost = [], []
+        for bid in self.vault.snapshot().committed_batches:
+            if f"batch_id={bid}" in built or bid in expired:
+                continue
+            man = self.vault.manifest(bid) or {}
+            met = man.get("metrics", {})
+            if not man.get("write_dir") or not any(
+                met.get(k) for k in ("inserted", "updated", "deleted", "delete_noop")
+            ):
+                os.makedirs(os.path.join(self.metrics_dir, f"batch_id={bid}"), exist_ok=True)
+                continue
+            wd = os.path.join(self.root, man["write_dir"])
+            if not os.path.isdir(wd) or _first_data_file(wd) is None:
+                lost.append(bid)
+                continue
+            reads.append(
+                read_parquet_pinned(self.spark, [wd])
+                .where("__action IN ('insert', 'update', 'delete', 'delete_noop')")
+                .selectExpr(
+                    f"'{bid}' AS batch_id",  # a hex digest (batch_id())
+                    "repo",
+                    "commit",
+                    "last_seq",
+                    "__content_len AS content_len",
+                    "IF(__action = 'delete_noop', 'delete', __action) AS __op",
+                )
+            )
+        if lost:
+            self._tombstone(lost)
+        if not reads:
+            return
+        t0 = time.perf_counter()
         (
-            winners.withColumn("content_len", F.col("__content_len"))
-            .groupBy("repo")
+            reduce(DataFrame.unionByName, reads)
+            .groupBy("batch_id", "repo")
             .agg(
                 F.count(F.lit(1)).alias("events"),
                 F.sum((F.col("__op") == "insert").cast("long")).alias("inserts"),
@@ -1225,6 +1210,11 @@ class CDCEngine:
                     5,
                 ).alias("sample_commits"),
             )
-            .write.mode("overwrite")  # per-batch subdir => idempotent on retry
-            .parquet(os.path.join(self.metrics_dir, f"batch_id={bid}"))
+            .write.mode("overwrite")
+            # no _SUCCESS marker: metrics_dir holds batch dirs only
+            .option("partitionOverwriteMode", "dynamic")
+            .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+            .partitionBy("batch_id")
+            .parquet(self.metrics_dir)
         )
+        self._tick("rollup_build", t0)

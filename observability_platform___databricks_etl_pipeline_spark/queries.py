@@ -1409,9 +1409,7 @@ def cdc_replay_documents(spark, sf_dir, write_mode="cow"):
         # committed table state, the schema event evolves it between
         # generations, and the final batch is quarantine-only
         write_wal(wal_df, wal, chunk_size=50_000)
-        eng = CDCEngine(
-            spark, f"{base}/tbl", n_buckets=8, with_rollup=False, write_mode=write_mode
-        )
+        eng = CDCEngine(spark, f"{base}/tbl", n_buckets=8, write_mode=write_mode)
         eng.replay(wal)
         out = eng.current_state().select(
             "repo",
@@ -1558,8 +1556,7 @@ def _entry_engine(spark):
     write_wal(generate_changelog(spark, 4000, seed=42), _ENTRY_WAL, chunk_size=2000)
     base = tempfile.mkdtemp(prefix="cdc-entry-")
     atexit.register(shutil.rmtree, base, ignore_errors=True)
-    # rollup ON: the per-batch Gold metrics feed the cdc_ingest_rollup gate
-    eng = CDCEngine(spark, f"{base}/tbl", n_buckets=8, with_rollup=True)
+    eng = CDCEngine(spark, f"{base}/tbl", n_buckets=8)
     eng.replay(_ENTRY_WAL)
     _ENTRY_ENGINES[key] = eng
     return eng
@@ -1767,7 +1764,7 @@ def _ingest_rollup_oracle() -> str:
     via lag(final-op) over the key's chunk sequence (the table state a
     chunk-k merge sees for a key IS the key's latest earlier-chunk winner);
     delete and delete_noop both roll up as 'delete', exactly like
-    replay._rollup_from_dir. Approx-percentile and sampled-commit columns
+    replay._build_rollups. Approx-percentile and sampled-commit columns
     are excluded (approx sketches are not cross-engine reproducible)."""
     san = _sanitize_sql_duckdb("content0")
     return f"""
@@ -1816,8 +1813,8 @@ def _ingest_rollup_oracle() -> str:
 @_register("cdc_ingest_rollup", _ingest_rollup_oracle())
 def cdc_ingest_rollup(spark, sf_dir):
     """The PER-BATCH ingest rollup (Gold analog, A1's 13-agg family on
-    engine-derived data, previously pytest-only): the async post-write
-    metrics pass — batch winners, insert/update/delete mix classified
+    engine-derived data, previously pytest-only): the rollup built on read
+    from each batch's write dir — batch winners, insert/update/delete mix classified
     against prior table state, sanitized byte volume, seq ranges — is
     value-hashed against a windowed DuckDB replay. Batch ids map to chunks
     via the commit-manifest lineage."""

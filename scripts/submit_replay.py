@@ -34,7 +34,6 @@ def main() -> int:
     ap.add_argument("--table", required=True, help="LakeVault table root")
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--max-batches", type=int, default=None)
-    ap.add_argument("--no-rollup", action="store_true")
     ap.add_argument(
         "--gen-events", type=int, default=None,
         help="generate a deterministic WAL of N events at --wal first (testing)",
@@ -70,9 +69,7 @@ def main() -> int:
             chunk_size=max(100_000, args.gen_events // 8),
         )
 
-    engine = CDCEngine(
-        spark, args.table, n_buckets=args.buckets, with_rollup=not args.no_rollup
-    )
+    engine = CDCEngine(spark, args.table, n_buckets=args.buckets)
     t0 = time.perf_counter()
     res = engine.replay(args.wal, max_batches=args.max_batches)
     elapsed = time.perf_counter() - t0

@@ -373,7 +373,7 @@ def test_two_mor_engines_concurrent_ingest(spark, tmp_path):
 
     # serial oracle: one engine, both WALs in sequence
     serial = CDCEngine(spark, str(tmp_path / "serial"), n_buckets=8,
-                       with_rollup=False, write_mode="mor",
+                       write_mode="mor",
                        mor_compact_threshold=2)
     serial.replay(wal_a)
     serial.replay(wal_b)
@@ -382,9 +382,9 @@ def test_two_mor_engines_concurrent_ingest(spark, tmp_path):
     # concurrent: two engines, one table (created before the race),
     # threshold 2 so auto-compact contends mid-race
     root = str(tmp_path / "conc")
-    ea = CDCEngine(spark, root, n_buckets=8, with_rollup=False,
+    ea = CDCEngine(spark, root, n_buckets=8,
                    write_mode="mor", mor_compact_threshold=2)
-    eb = CDCEngine(spark, root, n_buckets=8, with_rollup=False,
+    eb = CDCEngine(spark, root, n_buckets=8,
                    write_mode="mor", mor_compact_threshold=2)
 
     results, errs = _race([
@@ -400,6 +400,6 @@ def test_two_mor_engines_concurrent_ingest(spark, tmp_path):
     bids = {CDCEngine.batch_id(w, c) for w in (wal_a, wal_b) for c in range(3)}
     assert bids <= ea.vault.committed_batches()
     # re-replay of either WAL is a full no-op
-    res3 = CDCEngine(spark, root, n_buckets=8, with_rollup=False,
+    res3 = CDCEngine(spark, root, n_buckets=8,
                      write_mode="mor").replay(wal_a)
     assert all(b.skipped for b in res3.batches)

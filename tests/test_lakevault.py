@@ -479,6 +479,40 @@ def test_distributed_harvest_preserves_numeric_key_stats(spark, tmp_path):
     assert got == 5
 
 
+def test_nan_key_probes_keep_the_file_holding_nan(spark, tmp_path):
+    """Spark sorts NaN above every other value. A Spark-written file holding
+    1.0, NaN and 2.0 records max = NaN in its footer, and a pyarrow-written
+    one (the lakevault writer) records [1.0, 2.0], skipping NaN. Neither may
+    let a probe that matches the NaN row prune the file: the NaN point probe
+    on both read paths, and ``k >= 5`` on a key range. One bucket and one
+    write task, so the NaN row shares its file with the others."""
+    from observability_platform___databricks_etl_pipeline_spark.sources import lakevault_ds
+
+    nan = float("nan")
+    rows = [(1.0, 1, 10), (nan, 2, 20), (2.0, 3, 30)]
+    cols = [("k", "double"), ("last_seq", "long"), ("v", "int")]
+    ddl = "k double, last_seq long, v int"
+    lakevault_ds.register(spark)
+
+    sv = LakeVault.create(spark, str(tmp_path / "spark"), cols, key_cols=("k",), n_buckets=1)
+    wd = sv.new_write_dir("nan")
+    (spark.createDataFrame(rows, ddl).withColumn("__bucket", sv.bucket_expr())
+       .repartition(1).write.mode("overwrite").partitionBy("__bucket").parquet(wd))
+    sv.commit(add_write_dir=wd, replace_buckets=None, batch_id="nan", manifest={})
+    assert sv.scan().where(F.isnan("k")).count() == 1
+    assert sv.scan(key_equals=(nan,)).where(F.isnan("k")).count() == 1
+    ds = spark.read.format("lakevault").load(sv.root)
+    assert ds.where(F.col("k") == nan).count() == 1
+
+    pv = LakeVault.create(spark, str(tmp_path / "arrow"), cols, key_cols=("k",), n_buckets=1)
+    spark.createDataFrame(rows, ddl).coalesce(1).write.format("lakevault").mode("append").save(
+        pv.root
+    )
+    assert pv.scan().where("k >= 5").count() == 1  # the NaN row
+    assert pv.scan(key_range=(5.0, None)).where("k >= 5").count() == 1
+    assert pv.scan(key_equals=(nan,)).where(F.isnan("k")).count() == 1
+
+
 # ---- per-column stats + data skipping (round 5) ---------------------------
 
 

@@ -159,7 +159,6 @@ def test_duplicate_seq_across_commits_canonical_winner(spark, tmp_path):
         _one_event_wal(spark, wal2, 100, fresh, "second-delivery")
         eng = CDCEngine(
             spark, str(tmp_path / f"t-{mode}"), n_buckets=4, write_mode=mode,
-            with_rollup=False,
         )
         eng.replay(wal1)
         eng.replay(wal2)

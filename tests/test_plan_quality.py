@@ -109,7 +109,7 @@ def test_engine_merge_has_single_exchange_per_side(spark, tmp_path):
     store = spark._jsparkSession.sharedState().statusStore()
     for n_buckets in (4, 16):
         eng = CDCEngine(
-            spark, str(tmp_path / f"t{n_buckets}"), n_buckets=n_buckets, with_rollup=False
+            spark, str(tmp_path / f"t{n_buckets}"), n_buckets=n_buckets
         )
         eng.replay(wal)
 
@@ -153,7 +153,7 @@ def test_key_range_pruning_after_compact(spark, tmp_path):
         wal,
         chunk_size=8000,
     )
-    eng = CDCEngine(spark, str(tmp_path / "t"), n_buckets=4, with_rollup=False)
+    eng = CDCEngine(spark, str(tmp_path / "t"), n_buckets=4)
     eng.replay(wal)
     # force many small range-clustered files
     eng.vault.compact(target_file_rows=300)
@@ -182,12 +182,12 @@ def test_rebucket_compact_then_replay(spark, tmp_path):
     wal = str(tmp_path / "wal")
     write_wal(generate_changelog(spark, 4000, seed=17), wal, chunk_size=1000)
     root = str(tmp_path / "t")
-    eng = CDCEngine(spark, root, n_buckets=2, with_rollup=False)
+    eng = CDCEngine(spark, root, n_buckets=2)
     eng.replay(wal, max_batches=2)
     assert eng.vault.n_buckets == 2
     eng.vault.compact(target_file_rows=1000, n_buckets=8)
     assert eng.vault.n_buckets == 8
-    eng2 = CDCEngine(spark, root, with_rollup=False)  # reload, finish replay
+    eng2 = CDCEngine(spark, root)  # reload, finish replay
     eng2.replay(wal)
     exp = replay_oracle(wal)
     got = {
@@ -324,7 +324,7 @@ def test_read_planning_submits_no_spark_job(spark, tmp_path):
     buckets = sorted({bucket_of([r[0], r[1]], 4) for r in live})[:2]
     tomb = ("r0", "b2", "c", "py", None, "dh", 100, True, 2, 2.0, None)
 
-    eng = CDCEngine(spark, root, n_buckets=4, with_rollup=False)
+    eng = CDCEngine(spark, root, n_buckets=4)
     sc = spark.sparkContext._jsc.sc()
     store = sc.statusStore()
     sc.listenerBus().waitUntilEmpty()

@@ -68,6 +68,7 @@ def test_quarantine_and_metrics(spark, tmp_path, wal):
     q = spark.read.parquet(engine.quarantine_dir)
     assert q.count() == sum(b.quarantined for b in res.batches)
     assert q.count() > 0
+    engine.ingest_metrics()  # the rollup is built on read
     roll = spark.read.parquet(engine.metrics_dir)
     assert roll.count() > 0
     assert {"repo", "events", "p95_content_len", "batch_id"} <= set(roll.columns)
@@ -101,10 +102,11 @@ def test_engine_expire_bounds_side_tables(spark, tmp_path, wal):
     import os
 
     root = str(tmp_path / "tbl-exp")
-    engine = CDCEngine(spark, root, n_buckets=8, with_rollup=True)
+    engine = CDCEngine(spark, root, n_buckets=8)
     res = engine.replay(wal)
     n_batches = len([b for b in res.batches if not b.skipped])
     assert n_batches >= 3
+    engine.ingest_metrics()  # the rollup is built on read
     assert len(os.listdir(engine.metrics_dir)) == n_batches
 
     engine.expire(keep_last=2, keep_side_batches=1)
@@ -119,7 +121,7 @@ def test_engine_expire_bounds_side_tables(spark, tmp_path, wal):
     assert [f[:-5] for f in os.listdir(mdir)] == [last_bid]
     # retained rollup still reads; exactly-once set survives retention
     assert engine.ingest_metrics().count() > 0
-    res2 = CDCEngine(spark, root, n_buckets=8, with_rollup=False).replay(wal)
+    res2 = CDCEngine(spark, root, n_buckets=8).replay(wal)
     assert all(b.skipped for b in res2.batches)
 
 
@@ -139,6 +141,151 @@ def test_expire_tombstones_block_rollup_resurrection(spark, tmp_path, wal):
     res = CDCEngine(spark, root, n_buckets=8, with_rollup=True).replay(wal)
     assert all(b.skipped for b in res.batches)
     assert os.listdir(eng.metrics_dir) == [f"batch_id={last_bid}"]  # not resurrected
+
+
+ROLLUP_GATE_COLS = [
+    "batch_id", "repo", "events", "inserts", "updates", "deletes", "bytes", "first_seq", "last_seq",
+]
+
+
+def _rollup_rows(eng):
+    return sorted(tuple(r) for r in eng.ingest_metrics().select(*ROLLUP_GATE_COLS).collect())
+
+
+def test_replay_runs_no_rollup_job(spark, tmp_path, wal):
+    """The rollup is built on read: a replay writes nothing under
+    metrics_dir, as the SQL status store shows, and the first
+    ingest_metrics() builds it in one write."""
+    import os
+
+    eng = CDCEngine(spark, str(tmp_path / "tbl-lazy"), n_buckets=8)
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def rollup_writes():
+        bus.waitUntilEmpty()
+        execs = store.executionsList()
+        plans = [execs.apply(i).physicalPlanDescription() for i in range(execs.size())]
+        return [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p and eng.metrics_dir in p]
+
+    res = eng.replay(wal, max_batches=1)
+    assert [b.skipped for b in res.batches] == [False]
+    assert not os.path.exists(eng.metrics_dir)
+    assert rollup_writes() == []
+
+    assert eng.ingest_metrics().count() > 0
+    assert len(rollup_writes()) == 1
+    assert os.listdir(eng.metrics_dir) == [f"batch_id={res.batches[0].batch_id}"]
+
+
+@pytest.fixture(scope="module")
+def twin_rollup(spark, tmp_path_factory, wal):
+    """Rollup rows of a table replayed from ``wal`` and built before any expire."""
+    twin = CDCEngine(spark, str(tmp_path_factory.mktemp("twin") / "tbl"), n_buckets=8)
+    twin.replay(wal)
+    return _rollup_rows(twin)
+
+
+@pytest.mark.parametrize("engine_kw", [{}, {"with_rollup": False}], ids=["default", "rollup_false"])
+def test_expire_builds_rollups_before_it_sweeps(spark, tmp_path, wal, twin_rollup, engine_kw):
+    """expire() deletes the older batches' write dirs, which are the
+    rollups' only source: the rollups it builds first must equal those of a
+    twin table whose rollups were built before any expire. An engine built
+    with the ignored with_rollup=False keeps the same order, so a later
+    engine's ingest_metrics() reads every rollup."""
+    import os
+
+    root = str(tmp_path / "tbl-a")
+    eng = CDCEngine(spark, root, n_buckets=8, **engine_kw)
+    eng.replay(wal)
+    first = eng.lineage()[0]
+    assert first["metrics"]["inserted"] > 0
+
+    eng.expire(keep_last=1)
+    first_wd = os.path.join(eng.root, first["write_dir"])
+    assert not any(fn.endswith(".parquet") for _dp, _dn, fns in os.walk(first_wd) for fn in fns)
+    assert _rollup_rows(CDCEngine(spark, root, n_buckets=8)) == twin_rollup
+    assert {r[0] for r in twin_rollup} == set(eng.vault.snapshot().committed_batches)
+
+
+def test_ingest_metrics_after_expire_regrows_no_swept_dir(spark, tmp_path, wal):
+    """The rollup builder honours expire()'s tombstones: a build after the
+    side sweep leaves only the kept batch's rollup dir."""
+    import os
+
+    eng = CDCEngine(spark, str(tmp_path / "tbl-ts2"), n_buckets=8)
+    eng.replay(wal)
+    eng.expire(keep_last=10, keep_side_batches=1)  # keep data files, sweep side dirs
+    last_bid = eng.vault.snapshot().committed_batches[-1]
+    assert eng.ingest_metrics().select("batch_id").distinct().count() == 1
+    assert os.listdir(eng.metrics_dir) == [f"batch_id={last_bid}"]
+
+
+def test_rollup_build_leaves_nothing_pending(spark, tmp_path, wal, monkeypatch):
+    """Every pending batch leaves a build with a dir or a tombstone, so the
+    next build reads no manifest. A batch with nothing to roll up (here a
+    manifest written before ``write_dir`` existed) gets an empty dir. A batch
+    whose rollup dir was lost after expire() swept its write dir is
+    tombstoned instead of failing every later read."""
+    import json
+    import os
+    import shutil
+
+    eng = CDCEngine(spark, str(tmp_path / "tbl-pend"), n_buckets=8)
+    eng.replay(wal)
+    bids = eng.vault.snapshot().committed_batches
+    b0, b2 = bids[0], bids[-1]
+    eng.expire(keep_last=1)  # builds every rollup, sweeps b0's write dir
+    shutil.rmtree(os.path.join(eng.metrics_dir, f"batch_id={b0}"))
+    shutil.rmtree(os.path.join(eng.metrics_dir, f"batch_id={b2}"))
+    mpath = os.path.join(eng.vault.vault_dir, "manifests", f"{b2}.json")
+    man = eng.vault.manifest(b2)
+    del man["write_dir"]
+    with open(mpath, "w") as f:
+        json.dump(man, f)
+
+    kept = {r[0] for r in eng.ingest_metrics().select("batch_id").distinct().collect()}
+    assert kept == set(bids[1:-1])
+    assert b0 in eng._expired_side_batches()
+    assert os.listdir(os.path.join(eng.metrics_dir, f"batch_id={b2}")) == []
+
+    def no_manifest_read(_bid):
+        raise AssertionError("a pending-batch scan read a manifest")
+
+    monkeypatch.setattr(eng.vault, "manifest", no_manifest_read)
+    assert eng.ingest_metrics().select("batch_id").distinct().count() == len(kept)
+    eng.expire(keep_last=1)
+
+
+def test_failed_rollup_build_raises_before_expire_deletes(spark, tmp_path, wal, monkeypatch):
+    """A rollup build that fails raises from ingest_metrics(), and from
+    expire() before it deletes any file."""
+    import os
+
+    from observability_platform___databricks_etl_pipeline_spark.plans import replay as replay_mod
+
+    eng = CDCEngine(spark, str(tmp_path / "tbl-fail"), n_buckets=8)
+    eng.replay(wal, max_batches=2)
+
+    def on_disk():
+        return {os.path.join(dp, fn) for dp, _dn, fns in os.walk(eng.root) for fn in fns}
+
+    def boom(*_a, **_kw):
+        raise OSError("write dir unreadable")
+
+    monkeypatch.setattr(replay_mod, "read_parquet_pinned", boom)
+    with pytest.raises(OSError, match="unreadable"):
+        eng.ingest_metrics()
+    before, ids = on_disk(), eng.vault.snapshot_ids()
+    with pytest.raises(OSError, match="unreadable"):
+        eng.expire(keep_last=1)
+    assert before <= on_disk()
+    assert eng.vault.snapshot_ids() == ids
+
+    monkeypatch.undo()
+    eng.expire(keep_last=1)
+    assert eng.vault.snapshot_ids() == ids[-1:]
+    assert eng.ingest_metrics().select("batch_id").distinct().count() == 2
 
 
 @pytest.mark.parametrize("crash_after", [2, 6, 12])

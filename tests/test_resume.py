@@ -73,8 +73,9 @@ def test_crash_mid_batch_before_commit(spark, tmp_path, wal):
 
 
 def test_rollup_backfill_on_resume(spark, tmp_path):
-    """The rollup is async derived data: a crash can commit a batch without
-    its rollup. Resume must backfill the hole idempotently."""
+    """The rollup is derived data built on read: a crash can leave a
+    committed batch without its rollup. The next ingest_metrics() must
+    rebuild the hole idempotently."""
     import os
     import shutil
 
@@ -87,11 +88,14 @@ def test_rollup_backfill_on_resume(spark, tmp_path):
     res = eng.replay(wal)
     applied = [b for b in res.batches if not b.skipped]
     gone = os.path.join(eng.metrics_dir, f"batch_id={applied[0].batch_id}")
+    eng.ingest_metrics()
     assert os.path.isdir(gone)
-    shutil.rmtree(gone)  # simulate crash-between-commit-and-rollup
+    shutil.rmtree(gone)  # simulate a crash that lost the rollup
 
-    res2 = CDCEngine(spark, str(tmp_path / "tbl"), n_buckets=4).replay(wal)
+    eng2 = CDCEngine(spark, str(tmp_path / "tbl"), n_buckets=4)
+    res2 = eng2.replay(wal)
     assert all(b.skipped for b in res2.batches)  # nothing re-applied
+    eng2.ingest_metrics()
     assert os.path.isdir(gone)  # rollup hole backfilled
     roll = spark.read.parquet(eng.metrics_dir)
     assert roll.where(f"batch_id = '{applied[0].batch_id}'").count() > 0

@@ -198,7 +198,7 @@ def test_engine_changes_tombstone_transitions(spark, tmp_path):
         wal,
         chunk_size=10,
     )
-    eng = CDCEngine(spark, str(tmp_path / "tbl"), n_buckets=4, with_rollup=False)
+    eng = CDCEngine(spark, str(tmp_path / "tbl"), n_buckets=4)
     eng.replay(wal)
     lin = eng.lineage()
     assert len(lin) == 2
@@ -268,7 +268,7 @@ def test_tail_spans_resume_and_materialize(spark, tmp_path):
 
     wal = str(tmp_path / "wal")
     write_wal(generate_changelog(spark, 3000, seed=21), wal, chunk_size=1000)
-    eng = CDCEngine(spark, str(tmp_path / "tbl"), n_buckets=4, with_rollup=False)
+    eng = CDCEngine(spark, str(tmp_path / "tbl"), n_buckets=4)
     cp = str(tmp_path / "consumer-cp")
 
     store: dict = {}
@@ -334,7 +334,7 @@ def test_tail_cursor_predating_retention_raises(spark, tmp_path):
 
     wal = str(tmp_path / "wal")
     write_wal(generate_changelog(spark, 3000, seed=22), wal, chunk_size=1000)
-    eng = CDCEngine(spark, str(tmp_path / "tbl"), n_buckets=4, with_rollup=False)
+    eng = CDCEngine(spark, str(tmp_path / "tbl"), n_buckets=4)
     eng.replay(wal)
     eng.expire(keep_last=1)
 
@@ -365,7 +365,7 @@ def test_tail_exactly_once_downstream_mirror(spark, tmp_path):
         wal,
         chunk_size=1500,
     )
-    eng = CDCEngine(spark, str(tmp_path / "tbl"), n_buckets=4, with_rollup=False)
+    eng = CDCEngine(spark, str(tmp_path / "tbl"), n_buckets=4)
     cp = str(tmp_path / "cp")
     mirror_root = str(tmp_path / "mirror")
     mirror = None

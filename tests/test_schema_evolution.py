@@ -177,7 +177,7 @@ def test_promote_preserves_float_era_precision(spark, tmp_path):
     ]
     wal = str(tmp_path / "wal_fp")
     write_wal(_mini_wal_df(spark, rows), wal, chunk_size=10)
-    eng = CDCEngine(spark, str(tmp_path / "tbl_fp"), n_buckets=1, with_rollup=False)
+    eng = CDCEngine(spark, str(tmp_path / "tbl_fp"), n_buckets=1)
     eng.replay(wal)
     state = eng.current_state()
     assert dict(state.dtypes)["quality"] == "double"
@@ -212,7 +212,7 @@ def test_promote_invalid_ops_skipped(spark, tmp_path):
     ]
     wal = str(tmp_path / "wal_inv")
     write_wal(_mini_wal_df(spark, rows), wal, chunk_size=100)
-    eng = CDCEngine(spark, str(tmp_path / "tbl_inv"), n_buckets=2, with_rollup=False)
+    eng = CDCEngine(spark, str(tmp_path / "tbl_inv"), n_buckets=2)
     res = eng.replay(wal)
     m = res.batches[0]
     assert m.schema_ops == 6 and m.schema_ops_invalid == 5
@@ -292,7 +292,7 @@ def test_rename_onto_existing_column_is_skipped_as_invalid(spark, tmp_path):
               " op string, lang string, content string, props map<string,string>")
     wal = str(tmp_path / "wal")
     write_wal(spark.createDataFrame(rows, schema), wal, chunk_size=10)
-    eng = CDCEngine(spark, str(tmp_path / "tbl"), n_buckets=4, with_rollup=False)
+    eng = CDCEngine(spark, str(tmp_path / "tbl"), n_buckets=4)
     res = eng.replay(wal)
     assert sum(b.schema_ops_invalid for b in res.batches) == 1
     state = eng.current_state()
@@ -354,7 +354,7 @@ def test_drop_then_readd_is_a_new_column(spark, tmp_path):
     ]
     wal = str(tmp_path / "wal_ra")
     write_wal(_mini_wal_df(spark, rows), wal, chunk_size=2)
-    eng = CDCEngine(spark, str(tmp_path / "tbl_ra"), n_buckets=1, with_rollup=False)
+    eng = CDCEngine(spark, str(tmp_path / "tbl_ra"), n_buckets=1)
     eng.replay(wal)
     state = eng.current_state()
     got = {r["path"]: r["quality"] for r in state.collect()}
@@ -392,7 +392,7 @@ def test_drop_invalid_ops_skipped(spark, tmp_path):
     ]
     wal = str(tmp_path / "wal_di")
     write_wal(_mini_wal_df(spark, rows), wal, chunk_size=100)
-    eng = CDCEngine(spark, str(tmp_path / "tbl_di"), n_buckets=2, with_rollup=False)
+    eng = CDCEngine(spark, str(tmp_path / "tbl_di"), n_buckets=2)
     res = eng.replay(wal)
     m = res.batches[0]
     assert m.schema_ops == 5 and m.schema_ops_invalid == 4
@@ -475,7 +475,7 @@ def test_rename_of_base_or_key_column_is_skipped_as_invalid(spark, tmp_path):
               " op string, lang string, content string, props map<string,string>")
     wal = str(tmp_path / "wal")
     write_wal(spark.createDataFrame(rows, schema), wal, chunk_size=10)
-    eng = CDCEngine(spark, str(tmp_path / "tbl"), n_buckets=4, with_rollup=False)
+    eng = CDCEngine(spark, str(tmp_path / "tbl"), n_buckets=4)
     res = eng.replay(wal)
     assert sum(b.schema_ops_invalid for b in res.batches) == 2
     state = eng.current_state()
@@ -483,5 +483,5 @@ def test_rename_of_base_or_key_column_is_skipped_as_invalid(spark, tmp_path):
     assert "score" in state.columns and "quality" not in state.columns
     assert state.where(F.col("score") == 0.5).count() == 1
     # replay is still resumable (nothing poisoned): a second replay no-ops
-    res2 = CDCEngine(spark, str(tmp_path / "tbl"), n_buckets=4, with_rollup=False).replay(wal)
+    res2 = CDCEngine(spark, str(tmp_path / "tbl"), n_buckets=4).replay(wal)
     assert all(b.skipped for b in res2.batches)
