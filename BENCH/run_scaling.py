@@ -384,10 +384,11 @@ def write_report(state: dict) -> None:
         "  (shuffle bytes/batch roughly halved; 2→8 efficiency 0.71→0.77 in the",
         "  8M A/B, and ≥0.8 north target cleared at 2→8 with the plan held",
         "  fixed across levels).",
-        "- **Async rollup** (r2): with_rollup=True (the shipped default) costs",
-        "  2-5% over rollup-off (was 30-55%): a content-pruned re-read of the",
-        "  just-written immutable files on a worker thread, overlapped with the",
-        "  next batch; resume backfills crash holes idempotently.",
+        "- **Rollup off the replay path**: `replay()` no longer builds the",
+        "  per-batch rollup. `ingest_metrics()` and `expire()` build it for every",
+        "  pending batch in one Spark write, a content-pruned read of each batch's",
+        "  immutable write dir. (r2 measured the async rollup it replaces at 2-5%",
+        "  over rollup-off.)",
         "- **Bucket-scoped compaction + MOR auto-compact** (r3): maintenance is",
         "  never O(table) on a regular path; see the COW-vs-MOR section.",
         "- **Manifest-layer commits** (r3): metadata cost flat in table size;",

@@ -165,7 +165,7 @@ class TableSchema:
 
     @staticmethod
     def from_json(d: dict[str, Any]) -> "TableSchema":
-        return TableSchema(d["columns"], d["next_id"], d.get("schema_id", 0))
+        return TableSchema(d["columns"], d["next_id"], d["schema_id"])
 
 
 @dataclass
@@ -187,22 +187,21 @@ class Snapshot:
     # every schema version ever committed, keyed by schema_id — needed to
     # read data files written under older schemas (rename by column id)
     schemas: dict[int, TableSchema]
+    # bucket count is SNAPSHOT state (not table.json) so a re-bucketing
+    # compact() is atomic with its commit: a crash in between can never leave
+    # merges computing affected-bucket sets under the wrong bucket function
+    n_buckets: int
     # [{"path","bucket","n_files","rows","bytes","delta"}] — path relative
     # to the _vault dir; bucket is the single bucket the manifest covers
-    # (None only for legacy/unknown groupings)
+    # (None for the bucket-less entries of an unpartitioned add_write_dir)
     manifest_refs: list[dict[str, Any]] = field(default_factory=list)
     # [{"path","n"}] append-only id segments; this snapshot owns the first
     # n ids of each segment (a crashed successor commit may have appended
     # more — invisible until ITS snapshot publishes)
     batch_log: list[dict[str, Any]] = field(default_factory=list)
     summary: dict[str, Any] = field(default_factory=dict)
-    # bucket count is SNAPSHOT state (not table.json) so a re-bucketing
-    # compact() is atomic with its commit: a crash in between can never leave
-    # merges computing affected-bucket sets under the wrong bucket function
-    n_buckets: int | None = None
     # runtime-only (never serialized): vault dir for lazy manifest loads,
-    # plus caches. _files_cache doubles as the storage for legacy snapshots
-    # whose file list was inline (pre-manifest format).
+    # plus the loaded file entries and batch ids.
     vault_dir: str | None = None
     _files_cache: list[dict[str, Any]] | None = None
     _batches_cache: list[str] | None = None
@@ -241,27 +240,24 @@ class Snapshot:
 
     @staticmethod
     def from_json(d: dict[str, Any], vault_dir: str | None = None) -> "Snapshot":
-        snap = Snapshot(
+        # an inline file list without refs would otherwise read as an empty
+        # table: refuse the pre-manifest format by name
+        if "files" in d or "manifest_refs" not in d:
+            raise ValueError(
+                f"snapshot {d.get('snapshot_id')} is in the pre-manifest inline "
+                "format (files listed in the snapshot JSON), which LakeVault does not read"
+            )
+        return Snapshot(
             snapshot_id=d["snapshot_id"],
-            parent_id=d.get("parent_id"),
+            parent_id=d["parent_id"],
             schema=TableSchema.from_json(d["schema"]),
             schemas={int(k): TableSchema.from_json(v) for k, v in d["schemas"].items()},
-            manifest_refs=d.get("manifest_refs", []),
-            batch_log=d.get("batch_log", []),
-            summary=d.get("summary", {}),
-            n_buckets=d.get("n_buckets"),
+            n_buckets=d["n_buckets"],
+            manifest_refs=d["manifest_refs"],
+            batch_log=d["batch_log"],
+            summary=d["summary"],
             vault_dir=vault_dir,
         )
-        # legacy inline format (pre-manifest): serve the lists from the
-        # snapshot itself; the next commit migrates them into manifests
-        if "files" in d:
-            snap._files_cache = d["files"]
-        if "committed_batches" in d:
-            snap._batches_cache = d["committed_batches"]
-        return snap
-
-    def is_legacy(self) -> bool:
-        return not self.manifest_refs and self._files_cache is not None and bool(self._files_cache)
 
 
 def changed_buckets(a: list[dict[str, Any]], b: list[dict[str, Any]]) -> set[int] | None:
@@ -316,9 +312,9 @@ def _parquet_footer_stats(full: str, key0: str) -> tuple[int, int, Any, Any, dic
     (the name under the schema version the file was written with — scan
     re-maps it by column id) to ``[min, max]``; a column appears only when
     EVERY row group carries min/max stats (a statless row group could hold
-    anything, so a partial bound is not a bound). Shared by the driver-side
-    and distributed harvest paths (must stay module-level: the executor path
-    pickles it into a mapInPandas closure).
+    anything, so a partial bound is not a bound). Shared by the commit's
+    driver-side harvest and the ``format("lakevault")`` writer, which calls
+    it on executors (so it stays module-level).
 
     NaN rule (the only one): Spark sorts NaN above every value, so a float
     span bounds its rows only if the footer rules NaN out. Spark's writer
@@ -354,7 +350,6 @@ def _parquet_footer_stats(full: str, key0: str) -> tuple[int, int, Any, Any, dic
                     # non-JSON-able stat types (date/datetime/decimal key
                     # columns): store no stats rather than crash the manifest
                     # JSON write — pruning conservatively keeps the file.
-                    # Applies identically on the driver and executor paths.
                     kmin = kmax = None
         for j, name in enumerate(names):
             if "." in name:
@@ -624,8 +619,7 @@ class LakeVault:
 
     @property
     def n_buckets(self) -> int:
-        nb = self.snapshot().n_buckets
-        return nb if nb is not None else self.table_meta["n_buckets"]
+        return self.snapshot().n_buckets
 
     def current_snapshot_id(self) -> int:
         """Head = highest contiguous snapshot above the version pointer.
@@ -1079,7 +1073,7 @@ class LakeVault:
         bucket's manifests survive before key-range/stats/bloom pruning even
         run — O(1/n_buckets) of the metadata touched, no Spark job. Also
         folds into ``key_range`` (first key). The bucket step is skipped —
-        never wrong — when legacy bucket-less files exist. ``pruned_files``
+        never wrong — when bucket-less files exist. ``pruned_files``
         owns the probe, so the ``lakevault`` data source's fully-keyed
         filters prune the same way. Callers still apply the row predicate
         (same superset contract)."""
@@ -1208,15 +1202,13 @@ class LakeVault:
                 )
             if key_range is None:
                 key_range = (key_equals[0], key_equals[0])
-            # legacy bucket-less files: the probe cannot be bucket-scoped
+            # bucket-less files: the probe cannot be bucket-scoped
             if buckets is None and not any(f.get("bucket") is None for f in files):
                 from observability_platform___databricks_etl_pipeline_spark.plans.sparkhash import bucket_of
 
                 by_name = {c["name"]: c for c in cur.columns}
-                nb = snap.n_buckets if snap.n_buckets is not None else self.table_meta["n_buckets"]
-                buckets = [
-                    bucket_of(list(key_equals), nb, types=[by_name[k]["type"] for k in self.key_cols])
-                ]
+                types = [by_name[k]["type"] for k in self.key_cols]
+                buckets = [bucket_of(list(key_equals), snap.n_buckets, types=types)]
         if column_equals:
             merged = dict(column_ranges or {})
             for col, v in column_equals.items():
@@ -1360,8 +1352,8 @@ class LakeVault:
             )
         snap_a = self.snapshot(from_snapshot_id)
         # affected = buckets whose live file set differs between A and B
-        # (this also catches a bucket REPLACED WITH NOTHING); None (legacy
-        # bucket-less files changed) means a full diff. Pure manifest
+        # (this also catches a bucket REPLACED WITH NOTHING); None
+        # (bucket-less files changed) means a full diff. Pure manifest
         # metadata, never lists the filesystem.
         affected = changed_buckets(snap_a.files, snap_b.files)
         b_buckets = None if affected is None else sorted(affected)
@@ -1401,99 +1393,37 @@ class LakeVault:
 
     # ---- commit ----------------------------------------------------------
 
-    # Above this many files, footer stats are harvested by EXECUTORS instead
-    # of a serial driver loop: a batch writing thousands of files on an
-    # object store would otherwise make the commit tail driver-serial (the
-    # shape Iceberg avoids by collecting per-file stats during the write).
-    # Below it, one Spark job costs more than the loop it replaces.
-    _STAT_HARVEST_DRIVER_MAX = 64
-
     def _register_written_files(
         self, write_dir: str, schema_id: int, delta: bool = False, eq_delete: bool = False
     ) -> list[dict[str, Any]]:
         """Walk a Spark-written bucket-partitioned directory and produce file
         entries with parquet-footer stats (rows + key min/max) — the manifest
         stats that make bucket pruning and key-range pruning free. The walk
-        itself is metadata-only; the footer reads go distributed past
-        ``_STAT_HARVEST_DRIVER_MAX`` files so commit cost never becomes
-        driver-serial in files-per-batch."""
+        is metadata-only and the footer reads (~KB each) run on the driver:
+        no Spark job."""
         key0 = self.key_cols[0]
-        files: list[tuple[str, int | None]] = []
+        entries: list[dict[str, Any]] = []
         for dirpath, _dirnames, filenames in os.walk(write_dir):
             bucket = None
             for part in dirpath.split(os.sep):
                 if part.startswith("__bucket="):
                     bucket = int(part.split("=", 1)[1])
             for fn in filenames:
-                if fn.endswith(".parquet"):
-                    files.append((os.path.join(dirpath, fn), bucket))
-        if not files:
-            return []
-
-        if len(files) <= self._STAT_HARVEST_DRIVER_MAX:
-            stats = {full: _parquet_footer_stats(full, key0) for full, _b in files}
-        else:
-            stats = self._harvest_stats_distributed([full for full, _b in files], key0)
-
-        entries: list[dict[str, Any]] = []
-        for full, bucket in files:
-            entry = _manifest_entry(self.root, full, bucket, schema_id, stats[full])
-            if delta:
-                entry["delta"] = True  # absent (not False) in COW entries: old snapshots stay readable
-            if eq_delete:
-                # equality-delete file (Iceberg v2 analog): rows are KEY
-                # columns only; at read time they remove every data row of
-                # the same key with a SMALLER commit ordinal (see scan()).
-                entry["eq_delete"] = True
-            entries.append(entry)
-        return entries
-
-    def _harvest_stats_distributed(
-        self, paths: list[str], key0: str
-    ) -> dict[str, tuple[int, int, Any, Any, dict[str, list]]]:
-        """Footer-stat harvest as ONE parallel Spark job over the path list:
-        executors open footers (pyarrow, ~KB reads), the driver collects only
-        (path, rows, bytes, min, max) tuples — O(files) bytes, not O(files)
-        serial round-trips. Key min/max travel JSON-ENCODED through the
-        transport column so their TYPE (str vs int vs float key columns)
-        survives the typed DataFrame and the resulting manifest entries are
-        byte-identical to the driver path's (a string-coerced '9' would
-        mis-prune against a numeric key range)."""
-        import pandas as pd
-
-        def harvest(it):
-            for pdf in it:
-                recs = []
-                for p in pdf["path"]:
-                    rows, nbytes, kmin, kmax, cstats = _parquet_footer_stats(p, key0)
-                    recs.append(
-                        (p, rows, nbytes, json.dumps(kmin), json.dumps(kmax), json.dumps(cstats))
-                    )
-                yield pd.DataFrame(
-                    recs, columns=["path", "rows", "bytes", "min_key", "max_key", "col_stats"]
+                if not fn.endswith(".parquet"):
+                    continue
+                full = os.path.join(dirpath, fn)
+                entry = _manifest_entry(
+                    self.root, full, bucket, schema_id, _parquet_footer_stats(full, key0)
                 )
-
-        n_slices = max(1, min(len(paths), self.spark.sparkContext.defaultParallelism))
-        rows = (
-            self.spark.createDataFrame([(p,) for p in paths], "path string")
-            .repartition(n_slices)
-            .mapInPandas(
-                harvest,
-                "path string, rows long, bytes long, min_key string, max_key string, "
-                "col_stats string",
-            )
-            .collect()
-        )
-        return {
-            r["path"]: (
-                r["rows"],
-                r["bytes"],
-                json.loads(r["min_key"]),
-                json.loads(r["max_key"]),
-                json.loads(r["col_stats"]),
-            )
-            for r in rows
-        }
+                if delta:
+                    entry["delta"] = True  # absent (not False) in COW entries: old snapshots stay readable
+                if eq_delete:
+                    # equality-delete file (Iceberg v2 analog): rows are KEY
+                    # columns only; at read time they remove every data row of
+                    # the same key with a SMALLER commit ordinal (see scan()).
+                    entry["eq_delete"] = True
+                entries.append(entry)
+        return entries
 
     def _write_manifests(
         self, entries: list[dict[str, Any]], tag: str
@@ -1532,19 +1462,16 @@ class LakeVault:
         tag: str,
     ) -> list[dict[str, Any]]:
         """Parent manifests carried into the child snapshot. O(refs) — file
-        entries are only loaded for a legacy inline snapshot (one-time
-        migration) or a bucket-less manifest intersecting the replacement."""
+        entries are only loaded for a bucket-less manifest, which is filtered
+        per file against the replacement."""
         if replace_all:
             return []
-        refs = parent.manifest_refs
-        if parent.is_legacy():
-            refs = self._write_manifests(parent.files, f"{tag}-migrated")
         if replace_buckets is None:
-            return list(refs)
+            return list(parent.manifest_refs)
         rb = set(replace_buckets)
         kept: list[dict[str, Any]] = []
         residual: list[dict[str, Any]] = []
-        for r in refs:
+        for r in parent.manifest_refs:
             if r["bucket"] is not None:
                 if r["bucket"] not in rb:
                     kept.append(r)
@@ -1575,18 +1502,7 @@ class LakeVault:
         own (path, prefix len) pairs, so older snapshots keep reading the
         exact segment bytes they were committed with; superseded tails are
         garbage-collected by ``expire_snapshots`` once unreferenced."""
-        if parent._batches_cache is not None and not parent.batch_log and parent._batches_cache:
-            # legacy inline batches: migrate once into full segments
-            segs: list[dict[str, Any]] = []
-            ids = list(parent.committed_batches)
-            os.makedirs(os.path.join(self.vault_dir, "batchlog"), exist_ok=True)
-            for k in range(0, len(ids), self._BATCH_SEG_CAP):
-                chunk = ids[k : k + self._BATCH_SEG_CAP]
-                rel = os.path.join("batchlog", f"seg-{len(segs)}-{tag}.json")
-                _atomic_write_json(os.path.join(self.vault_dir, rel), {"ids": chunk})
-                segs.append({"path": rel, "n": len(chunk)})
-        else:
-            segs = [dict(s) for s in parent.batch_log]
+        segs = [dict(s) for s in parent.batch_log]
         if batch_id is None:
             return segs
         os.makedirs(os.path.join(self.vault_dir, "batchlog"), exist_ok=True)
@@ -1642,17 +1558,9 @@ class LakeVault:
             raise CommitConflict("concurrent re-bucketing")
         if delta or not replace_buckets:
             return
-        # a legacy inline snapshot carries no refs to diff
-        changed = (
-            None
-            if base.is_legacy() or head.is_legacy()
-            else changed_buckets(base.manifest_refs, head.manifest_refs)
-        )
+        changed = changed_buckets(base.manifest_refs, head.manifest_refs)
         if changed is None:
-            raise CommitConflict(
-                "concurrent bucket-less writes or a legacy inline snapshot — "
-                "cannot prove disjointness"
-            )
+            raise CommitConflict("concurrent bucket-less writes — cannot prove disjointness")
         overlap = set(replace_buckets) & changed
         if overlap:
             raise CommitConflict(
@@ -1786,7 +1694,6 @@ class LakeVault:
 
             batch_log = self._append_batch_log(parent, batch_id, tag)
             refs = kept_refs + new_refs
-            parent_nb = parent.n_buckets if parent.n_buckets is not None else self.table_meta["n_buckets"]
             snap = Snapshot(
                 snapshot_id=new_id,
                 parent_id=parent.snapshot_id,
@@ -1794,7 +1701,7 @@ class LakeVault:
                 schemas=schemas,
                 manifest_refs=refs,
                 batch_log=batch_log,
-                n_buckets=new_n_buckets if new_n_buckets is not None else parent_nb,
+                n_buckets=new_n_buckets if new_n_buckets is not None else parent.n_buckets,
                 summary={
                     **(summary or {}),
                     "added_files": len(new_entries),
@@ -2011,14 +1918,15 @@ class LakeVault:
 
     def _dml_snapshot(self) -> Snapshot:
         """Pinned snapshot for a predicate-DML run, with the bucket-less
-        legacy guard: a ``bucket=None`` manifest entry can't be scoped by
-        ``replace_buckets``, so a DML that ignored it would report success
-        while matching rows in that file silently survive."""
+        guard: a ``bucket=None`` manifest entry (a commit of an unpartitioned
+        write dir) can't be scoped by ``replace_buckets``, so a DML that
+        ignored it would report success while matching rows in that file
+        silently survive."""
         snap = self.snapshot()
         if any(r["bucket"] is None for r in snap.manifest_refs):
             raise ValueError(
-                "table has bucket-less (legacy) file entries — run compact() "
-                "to migrate them into buckets before predicate DML"
+                "table has bucket-less file entries — run compact() "
+                "to bucket them before predicate DML"
             )
         return snap
 
@@ -2469,15 +2377,6 @@ class LakeVault:
         if snapshot_id == cur.snapshot_id:
             return cur.snapshot_id
         old = self.snapshot(snapshot_id)  # FileNotFoundError if expired
-        if old.is_legacy() or cur.is_legacy():
-            # a legacy inline snapshot keeps files/batches IN the JSON —
-            # carrying its (empty) refs/batch_log would publish an empty
-            # table and drop the exactly-once ids; any commit migrates
-            raise ValueError(
-                "restore needs manifest-format snapshots on both sides — "
-                "run any commit (e.g. compact()) to migrate the legacy "
-                "inline snapshot first"
-            )
         # fail fast if the old refs were already GC'd (shouldn't happen for
         # a listed snapshot, but a clear error beats a broken head)
         for r in old.manifest_refs:
@@ -2592,9 +2491,6 @@ class LakeVault:
         for sid in expired_ids:
             snap = self.snapshot(sid)
             dead_manifests.update(r["path"] for r in snap.manifest_refs)
-            if snap.is_legacy():
-                dead_files.update(f["path"] for f in snap.files)
-                continue
             for ref in snap.manifest_refs:
                 try:
                     with open(os.path.join(self.vault_dir, ref["path"])) as f:
@@ -2639,7 +2535,7 @@ class LakeVault:
 
         def _maybe_inflight(token: str) -> bool | None:
             """True: possibly in-flight (never sweep). False: dead attempt.
-            None: unparseable (caller's legacy policy applies)."""
+            None: unparseable (the caller decides)."""
             name, dot, att = token.partition(".")
             try:
                 if dot:
@@ -2657,14 +2553,9 @@ class LakeVault:
                 rel = os.path.join(sub, fn)
                 if rel in live_meta or not fn.endswith(".json"):
                     continue
+                # seg-<idx>-<token>-<nonce> / fl-<token>-<nonce>-...
                 parts = fn[: -len(".json")].split("-")
-                if fn.startswith("seg-"):
-                    # seg-<idx>-<token>-<nonce>; legacy seg-<idx> has no
-                    # attempt token (grace window alone applies)
-                    token = parts[2] if len(parts) >= 3 else ""
-                else:
-                    # fl-<token>-... (nonce'd and legacy alike)
-                    token = parts[1] if len(parts) >= 2 else ""
+                token = parts[2 if fn.startswith("seg-") else 1] if len(parts) >= 3 else ""
                 if _maybe_inflight(token):
                     continue
                 full = os.path.join(d, fn)

@@ -249,9 +249,9 @@ def _group_read_partitions(
 ) -> list["_ScanPartition"]:
     """Whole buckets, in bucket order, packed by ``_pack``. Keys are
     bucket-disjoint, so equality deletes and the LWW fold over any group of
-    whole buckets equal scan()'s global ones. Legacy bucket-less files
-    alongside deltas or deletes cannot be fold-scoped: the whole file set is
-    one unit (pre-bucket tables only)."""
+    whole buckets equal scan()'s global ones. Bucket-less files (a commit
+    of an unpartitioned write dir) alongside deltas or deletes cannot be
+    fold-scoped: the whole file set is one unit."""
     by_bucket: dict[Any, list[dict]] = {}
     for f in files:
         by_bucket.setdefault(f.get("bucket"), []).append(f)
@@ -773,9 +773,7 @@ class _LakeVaultWriterCore:
         self.cur_cols = _plain_cols(snap.schema)
         by_name = {c["name"]: c for c in self.cur_cols}
         self.key_types = [by_name[k]["type"] for k in self.key_cols]
-        self.n_buckets = (
-            snap.n_buckets if snap.n_buckets is not None else v.table_meta["n_buckets"]
-        )
+        self.n_buckets = snap.n_buckets
         self.write_dir = v.new_write_dir("dswriter")
 
     # -- executor side ------------------------------------------------------

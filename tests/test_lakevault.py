@@ -152,53 +152,30 @@ def test_commit_metadata_cost_flat_in_table_size(spark, tmp_path):
     assert v.scan().count() == 40
 
 
-def test_legacy_inline_snapshot_migrates_on_next_commit(spark, tmp_path):
-    """Back-compat: a snapshot written in the pre-manifest inline format
-    (files + committed_batches embedded in the JSON) must read correctly
-    and be migrated into manifest refs + batch-log segments by its next
-    commit, preserving every file and batch id."""
+def test_pre_manifest_inline_snapshot_raises(spark, tmp_path):
+    """A head snapshot in the pre-manifest inline format (file entries and
+    batch ids listed in the snapshot JSON, no manifest refs or batch log) is
+    not read: scan() and commit() raise a ValueError naming the snapshot
+    instead of reading it as an empty table."""
     import json as _json
-    import os as _os
 
-    from observability_platform___databricks_etl_pipeline_spark.plans.lakevault import LakeVault
+    import pytest as _pytest
 
-    root = str(tmp_path / "t")
-    v = LakeVault.create(spark, root, [("repo", "string"), ("path", "string"),
-                                       ("content_sha256", "string"), ("last_seq", "long")],
-                         key_cols=("repo", "path"), n_buckets=4)
-    df = spark.range(30).selectExpr(
-        "concat('r', id % 4) repo", "concat('p', id) path",
-        "cast(md5(cast(id as string)) as string) content_sha256", "id last_seq")
-    wd = v.new_write_dir("seed")
-    (df.withColumn("__bucket", v.bucket_expr())
-       .repartition(2).write.mode("overwrite").partitionBy("__bucket").parquet(wd))
-    v.commit(add_write_dir=wd, replace_buckets=None, batch_id="seed-batch",
-             manifest={"seed": True}, summary={"operation": "merge"})
-
-    # rewrite the current snapshot into the LEGACY inline format
+    v = _mk(spark, tmp_path, [("r1", "a.py", 1, False), ("r2", "b.py", 2, False)])
     snap = v.snapshot()
-    legacy = snap.to_json()
-    legacy.pop("manifest_refs"), legacy.pop("batch_log")
-    legacy["files"] = snap.files
-    legacy["committed_batches"] = snap.committed_batches
+    inline = snap.to_json()
+    inline.pop("manifest_refs"), inline.pop("batch_log")
+    inline["files"] = snap.files
+    inline["committed_batches"] = snap.committed_batches
     with open(v._snap_path(snap.snapshot_id), "w") as f:
-        _json.dump(legacy, f)
+        _json.dump(inline, f)
 
-    v2 = LakeVault.load(spark, root)
-    assert v2.snapshot().is_legacy()
-    assert v2.scan().count() == 30                     # legacy read path
-    assert "seed-batch" in v2.snapshot().committed_batches
-
-    # next commit migrates: refs + segments appear, nothing lost
-    wd2 = v2.new_write_dir("more")
-    (df.limit(5).withColumn("__bucket", v2.bucket_expr())
-       .repartition(1).write.mode("overwrite").partitionBy("__bucket").parquet(wd2))
-    v2.commit(add_write_dir=wd2, replace_buckets=[], batch_id="post-legacy",
-              manifest={"i": 1}, summary={"operation": "merge"}, delta=True)
-    snap3 = v2.snapshot()
-    assert snap3.manifest_refs and snap3.batch_log
-    assert set(snap3.committed_batches) == {"seed-batch", "post-legacy"}
-    assert v2.scan().count() == 30                     # delta LWW-merges over base
+    v2 = LakeVault.load(spark, v.root)
+    with _pytest.raises(ValueError, match=f"snapshot {snap.snapshot_id} is in the pre-manifest"):
+        v2.scan()
+    with _pytest.raises(ValueError, match="pre-manifest"):
+        v2.commit(add_write_dir=None, replace_buckets=[], batch_id="b1",
+                  manifest={"batch_id": "b1"})
 
 
 def test_expire_snapshots_removes_orphaned_manifests(spark, tmp_path):
@@ -321,11 +298,10 @@ def test_expire_sweeps_crash_orphaned_write_dirs(spark, tmp_path):
     assert v.scan().count() == 8  # committed data untouched
 
 
-def test_manifest_stats_harvest_distributed_matches_driver(spark, tmp_path):
-    """r3 verdict #2: past _STAT_HARVEST_DRIVER_MAX files the footer-stat
-    harvest runs as one parallel Spark job instead of a serial driver loop.
-    Both paths must produce byte-identical manifest entries, and a 500-file
-    commit must register every file with correct rows/min/max stats."""
+def test_manifest_stats_harvest_many_files_submits_no_spark_job(spark, tmp_path):
+    """r3 verdict #2: a 500-file commit must register every file with correct
+    rows/min/max stats, and the footer reads run on the driver: registering
+    the files submits no Spark job."""
     import os as _os
 
     from observability_platform___databricks_etl_pipeline_spark.plans.lakevault import LakeVault
@@ -341,19 +317,19 @@ def test_manifest_stats_harvest_distributed_matches_driver(spark, tmp_path):
     (df.withColumn("__bucket", v.bucket_expr())
        .repartition(125).write.mode("overwrite").partitionBy("__bucket").parquet(wd))
     n_files = sum(1 for dp, _dn, fns in _os.walk(wd) for f in fns if f.endswith(".parquet"))
-    assert n_files >= 400 > v._STAT_HARVEST_DRIVER_MAX
+    assert n_files >= 400
 
-    key = lambda e: e["path"]
-    dist = sorted(v._register_written_files(wd, 0), key=key)       # distributed path
-    try:
-        v._STAT_HARVEST_DRIVER_MAX = 10**9
-        drv = sorted(v._register_written_files(wd, 0), key=key)    # forced driver path
-    finally:
-        del v.__dict__["_STAT_HARVEST_DRIVER_MAX"]
-    assert dist == drv
-    assert sum(e["rows"] for e in dist) == 2000
+    sc = spark.sparkContext._jsc.sc()
+    store = sc.statusStore()
+    sc.listenerBus().waitUntilEmpty()
+    jobs_before = store.jobsList(None).size()
+    entries = v._register_written_files(wd, 0)
+    sc.listenerBus().waitUntilEmpty()
+    assert store.jobsList(None).size() == jobs_before
+    assert len(entries) == n_files
+    assert sum(e["rows"] for e in entries) == 2000
     assert all(e["min_key"] is not None and e["min_key"] <= e["max_key"]
-               for e in dist if e["rows"] > 0)
+               for e in entries if e["rows"] > 0)
 
     v.commit(add_write_dir=wd, replace_buckets=None, batch_id="many",
              manifest={"batch_id": "many"})
@@ -444,11 +420,9 @@ def test_lifecycle_property_commits_compact_expire(spark, tmp_path):
 
 
 def test_distributed_harvest_preserves_numeric_key_stats(spark, tmp_path):
-    """min/max key stats must keep their TYPE through the distributed
-    harvest (JSON transport): a numeric first key column stored as '9'/'100'
-    strings would mis-prune lexicographically against key ranges."""
-    import os as _os
-
+    """min/max key stats must keep their TYPE through the harvest of a
+    many-file commit: a numeric first key column stored as '9'/'100' strings
+    would mis-prune lexicographically against key ranges."""
     from observability_platform___databricks_etl_pipeline_spark.plans.lakevault import LakeVault
 
     root = str(tmp_path / "t")
@@ -459,18 +433,8 @@ def test_distributed_harvest_preserves_numeric_key_stats(spark, tmp_path):
     wd = v.new_write_dir("nk")
     (df.withColumn("__bucket", v.bucket_expr())
        .repartition(40).write.mode("overwrite").partitionBy("__bucket").parquet(wd))
-    n_files = sum(1 for dp, _dn, fns in _os.walk(wd) for f in fns if f.endswith(".parquet"))
-    assert n_files > v._STAT_HARVEST_DRIVER_MAX  # distributed path active
-
-    key = lambda e: e["path"]
-    dist = sorted(v._register_written_files(wd, 0), key=key)
-    try:
-        v._STAT_HARVEST_DRIVER_MAX = 10**9
-        drv = sorted(v._register_written_files(wd, 0), key=key)
-    finally:
-        del v.__dict__["_STAT_HARVEST_DRIVER_MAX"]
-    assert dist == drv
-    assert all(isinstance(e["min_key"], int) for e in dist if e["min_key"] is not None)
+    entries = v._register_written_files(wd, 0)
+    assert all(isinstance(e["min_key"], int) for e in entries if e["min_key"] is not None)
 
     v.commit(add_write_dir=wd, replace_buckets=None, batch_id="nk", manifest={})
     # numeric key-range pruning works end-to-end (superset guarantee + filter)
@@ -816,8 +780,7 @@ def test_dml_guards_and_pinned_base_conflict(spark, tmp_path):
     """Guard rails from the r5 review: (1) commit(base_snapshot_id=...)
     pinned at a snapshot an interleaved commit has since overlapped raises
     CommitConflict instead of clobbering; (2) predicate DML refuses tables
-    with bucket-less legacy manifest entries; (3) restore refuses legacy
-    inline snapshots; (4) update({}) refuses."""
+    with bucket-less manifest entries; (3) update({}) refuses."""
     import json as _json
 
     import pytest as _pytest
@@ -848,7 +811,7 @@ def test_dml_guards_and_pinned_base_conflict(spark, tmp_path):
     with _pytest.raises(ValueError, match="at least one column assignment"):
         v.update({}, where="score > 0")
 
-    # bucket-less legacy entry → DML refuses (a scoped rewrite would let
+    # bucket-less entry → DML refuses (a scoped rewrite would let
     # matching rows in that file silently survive)
     snap = v.snapshot()
     doctored = snap.to_json()
@@ -860,35 +823,6 @@ def test_dml_guards_and_pinned_base_conflict(spark, tmp_path):
         v2.delete("score > 0")
     with _pytest.raises(ValueError, match="bucket-less"):
         v2.update({"score": "0"}, where="score > 0")
-
-
-def test_restore_refuses_legacy_inline_snapshot(spark, tmp_path):
-    import json as _json
-
-    import pytest as _pytest
-
-    v = _mk(spark, tmp_path, [("r1", "a.py", 1, False), ("r2", "b.py", 2, False)])
-    good = v.current_snapshot_id()
-    wd = v.new_write_dir("b1")
-    df = spark.createDataFrame([("r3", "c.py", 3, False)],
-                               "repo string, path string, last_seq long, is_deleted boolean")
-    (df.withColumn("__bucket", v.bucket_expr())
-       .repartition(1, "__bucket").write.mode("overwrite").partitionBy("__bucket").parquet(wd))
-    v.commit(add_write_dir=wd, replace_buckets=[], batch_id="b1", manifest={"batch_id": "b1"})
-
-    # doctor the TARGET snapshot into legacy inline form
-    old = v.snapshot(good)
-    legacy = old.to_json()
-    legacy.pop("manifest_refs"), legacy.pop("batch_log")
-    legacy["files"] = old.files
-    legacy["committed_batches"] = old.committed_batches
-    with open(v._snap_path(good), "w") as f:
-        _json.dump(legacy, f)
-
-    v2 = LakeVault.load(spark, v.root)
-    with _pytest.raises(ValueError, match="legacy"):
-        v2.restore(good)
-    assert v2.scan().count() == 3  # head untouched by the refusal
 
 
 def test_inspection_metadata_tables(spark, tmp_path):

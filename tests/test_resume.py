@@ -138,3 +138,113 @@ def test_failed_batch_joins_its_quarantine_write(spark, tmp_path, wal, monkeypat
     assert b.quarantined > 0 and b.conserved()
     q = spark.read.parquet(f"{root}/quarantine/batch_id={b.batch_id}")
     assert q.count() == b.quarantined
+
+
+@pytest.fixture(scope="module")
+def crash_wal(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("walcrash") / "wal")
+    write_wal(generate_changelog(spark, 3000, seed=17), d, chunk_size=1000)
+    return d
+
+
+def _keyed_state(eng):
+    return {
+        (r["repo"], r["path"]): (r["content_sha256"], r["last_seq"])
+        for r in eng.current_state().collect()
+    }
+
+
+@pytest.fixture(scope="module")
+def straight_state(spark, tmp_path_factory, crash_wal):
+    """Final state of an uncrashed replay of ``crash_wal``, per write mode."""
+    cache = {}
+
+    def get(mode):
+        if mode not in cache:
+            root = str(tmp_path_factory.mktemp(f"straight-{mode}") / "tbl")
+            eng = CDCEngine(spark, root, n_buckets=8, write_mode=mode)
+            eng.replay(crash_wal)
+            cache[mode] = _keyed_state(eng)
+        return cache[mode]
+
+    return get
+
+
+@pytest.mark.parametrize("step", ["write_manifests", "append_batch_log", "claim"])
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_crash_in_commit_step_resumes_and_expires_clean(
+    spark, tmp_path, crash_wal, straight_state, monkeypatch, mode, step
+):
+    """A crash inside the second batch's commit, after one of its metadata
+    steps: the per-bucket manifests are written, the batch-log segment is
+    written, or the lineage manifest is written and the snapshot claim
+    fails. A fresh engine's resumed replay must equal a straight replay, and
+    after one more commit a zero-grace expire_snapshots(keep_last=1) must
+    leave no filelist or batch-log file and no staging dir that no retained
+    snapshot references."""
+    import os
+
+    from observability_platform___databricks_etl_pipeline_spark.plans import lakevault
+
+    calls = {"n": 0}
+
+    def crash_on_second(real):
+        def step_fn(*a, **kw):
+            calls["n"] += 1
+            if calls["n"] == 2 and step == "claim":
+                raise RuntimeError("injected crash")
+            out = real(*a, **kw)
+            if calls["n"] == 2:
+                raise RuntimeError("injected crash")
+            return out
+
+        return step_fn
+
+    if step == "claim":
+        monkeypatch.setattr(
+            lakevault, "_atomic_claim_json", crash_on_second(lakevault._atomic_claim_json)
+        )
+    else:
+        name = f"_{step}"
+        monkeypatch.setattr(
+            lakevault.LakeVault, name, crash_on_second(getattr(lakevault.LakeVault, name))
+        )
+
+    root = str(tmp_path / "tbl")
+    eng = CDCEngine(spark, root, n_buckets=8, write_mode=mode)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        eng.replay(crash_wal)
+    monkeypatch.undo()
+    vault = eng.vault
+    assert len(vault.committed_batches()) == 1  # the crash hit batch 2's commit
+    if step == "claim":
+        # the lineage manifest is written before the claim
+        assert len(os.listdir(os.path.join(vault.vault_dir, "manifests"))) == 2
+
+    eng2 = CDCEngine(spark, root, n_buckets=8, write_mode=mode)
+    res = eng2.replay(crash_wal)
+    assert [b.skipped for b in res.batches] == [True] + [False] * (len(res.batches) - 1)
+    assert _keyed_state(eng2) == straight_state(mode)
+
+    vault = eng2.vault
+    vault.commit(add_write_dir=None, replace_buckets=[], batch_id="after-crash")
+    vault.expire_snapshots(keep_last=1, orphan_grace_sec=0.0)
+    live_meta, live_files = set(), set()
+    for sid in vault.snapshot_ids():
+        snap = vault.snapshot(sid)
+        live_meta.update(r["path"] for r in snap.manifest_refs)
+        live_meta.update(s["path"] for s in snap.batch_log)
+        live_files.update(f["path"] for f in snap.files)
+    for sub in ("filelists", "batchlog"):
+        stray = {os.path.join(sub, fn) for fn in os.listdir(os.path.join(vault.vault_dir, sub))}
+        assert stray <= live_meta, stray - live_meta
+    for d in os.listdir(vault.data_dir):
+        if not d.startswith("w-"):
+            continue
+        listed = [
+            os.path.relpath(os.path.join(dp, fn), root)
+            for dp, _dn, fns in os.walk(os.path.join(vault.data_dir, d))
+            for fn in fns
+        ]
+        assert any(p in live_files for p in listed), f"stray staging dir {d}"
+    assert _keyed_state(CDCEngine(spark, root, n_buckets=8, write_mode=mode)) == straight_state(mode)
